@@ -23,9 +23,9 @@ recoverable) and gives S2-style algebra:
 
 Two implementations, guaranteed equal (tested):
 
-- **Column expressions** (``cell_expr`` etc.) — pure ``pyspark.sql.functions``
-  arithmetic/bit ops; stays inside whole-stage codegen, no Python in the hot
-  path.  This is what the engine uses for 100 TB scans.
+- **Spark SQL text** (``cell_expr`` etc.) — arithmetic/bit-op expressions
+  parsed once per output column; stays inside whole-stage codegen, no
+  Python in the hot path.  This is what the engine uses for 100 TB scans.
 - **numpy** (``latlng_to_cell`` etc.) — vectorized, for pandas-UDF composition
   and as the test oracle.
 
@@ -36,8 +36,6 @@ Two implementations, guaranteed equal (tested):
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 MAX_RES = 25  # 2*25+1 = 51 bits: exact in doubles, far below int64 limits.
 
@@ -150,54 +148,64 @@ def grid_disk_np(cell: int, k: int) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Spark column-expression implementation (JVM-side, codegen'd)
+# Spark SQL-text implementation (JVM-side, codegen'd)
 # ---------------------------------------------------------------------------
+#
+# Builders compose Spark SQL text: arguments are SQL fragments (a column
+# name is one) and the result is a fragment, parsed ONCE per output column
+# by ``F.expr`` / ``selectExpr``.  Building the same tree through the Column
+# API costs one py4j round trip per operator node (505 for one cell id).
+# Double literals carry a ``D`` suffix — a bare ``180.0`` is a DECIMAL in
+# Spark SQL.  Lambda variables are ``__``-prefixed so they never shadow a
+# column referenced by an argument fragment.
 
-def _spread_bits_expr(v: Column) -> Column:
+def dbl(v: float) -> str:
+    """A Spark SQL DOUBLE literal with the exact value of ``v``."""
+    return f"{float(v)!r}D"
+
+
+def _spread_bits_expr(v: str) -> str:
     for shift, mask in _SPREAD_MASKS:
-        v = (v.bitwiseOR(F.shiftleft(v, shift))).bitwiseAND(F.lit(mask))
+        v = f"(({v}) | shiftleft({v}, {shift})) & {mask}"
     return v
 
 
-def xy_expr(lat: Column, lng: Column, res: int) -> tuple[Column, Column]:
+def xy_expr(lat: str, lng: str, res: int) -> tuple[str, str]:
     n = 1 << res
-    x = F.floor((lng + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n))).cast("long")
-    y = F.floor((F.lit(90.0) - lat) / F.lit(180.0) * F.lit(float(n))).cast("long")
-    x = F.greatest(F.lit(0), F.least(F.lit(n - 1), x))
-    y = F.greatest(F.lit(0), F.least(F.lit(n - 1), y))
-    return x, y
+    x = f"CAST(floor((({lng}) + 180.0D) / 360.0D * {dbl(n)}) AS BIGINT)"
+    y = f"CAST(floor((90.0D - ({lat})) / 180.0D * {dbl(n)}) AS BIGINT)"
+    return f"greatest(0, least({n - 1}, {x}))", f"greatest(0, least({n - 1}, {y}))"
 
 
-def cell_expr(lat: Column, lng: Column, res: int) -> Column:
-    """lat/lng columns → hierarchical cell id, pure column arithmetic.
+def _marker(res: int) -> str:
+    return f"CAST({1 << (2 * res)} AS BIGINT)"
+
+
+def cell_expr(lat: str, lng: str, res: int) -> str:
+    """lat/lng → hierarchical cell id as Spark SQL text.
 
     Equivalent to :func:`latlng_to_cell`; stays in whole-stage codegen.
     """
     if not 0 <= res <= MAX_RES:
         raise ValueError(f"res must be in [0, {MAX_RES}]")
-    x, y = xy_expr(lat, lng, res)
-    marker = F.lit(1 << (2 * res)).cast("long")
-    return marker.bitwiseOR(_spread_bits_expr(x)).bitwiseOR(
-        F.shiftleft(_spread_bits_expr(y), 1)
-    )
+    return cell_from_xy_expr(*xy_expr(lat, lng, res), res)
 
 
-def cell_parent_expr(cell: Column, steps: int = 1) -> Column:
-    return F.shiftright(cell, 2 * steps)
+def cell_parent_expr(cell: str, steps: int = 1) -> str:
+    return f"shiftright({cell}, {2 * steps})"
 
 
-def cell_from_xy_expr(x: Column, y: Column, res: int) -> Column:
-    """(x, y) grid coordinates → hierarchical cell id (column arithmetic)."""
-    marker = F.lit(1 << (2 * res)).cast("long")
-    return marker.bitwiseOR(_spread_bits_expr(x.cast("long"))).bitwiseOR(
-        F.shiftleft(_spread_bits_expr(y.cast("long")), 1)
-    )
+def cell_from_xy_expr(x: str, y: str, res: int) -> str:
+    """(x, y) grid coordinates → hierarchical cell id (SQL text)."""
+    sx = _spread_bits_expr(f"CAST({x} AS BIGINT)")
+    sy = _spread_bits_expr(f"CAST({y} AS BIGINT)")
+    return f"({_marker(res)} | ({sx})) | shiftleft({sy}, 1)"
 
 
-def cell_xy_expr(lat: Column, lng: Column, res: int) -> Column:
+def cell_xy_expr(lat: str, lng: str, res: int) -> str:
     """Non-hierarchical ``x * 2^res + y`` id — ANSI-SQL-reproducible (oracle)."""
     x, y = xy_expr(lat, lng, res)
-    return x * F.lit(1 << res) + y
+    return f"(({x}) * {1 << res}) + ({y})"
 
 
 def cell_xy_sql(lat: str, lng: str, res: int) -> str:
@@ -238,9 +246,9 @@ def cell_morton_sql(lat: str, lng: str, res: int) -> str:
     return f"({1 << (2 * res)} | {spread(x, 0)} | {spread(y, 1)})"
 
 
-def _compact_bits_expr(v: Column) -> Column:
-    """Inverse Morton interleave (column twin of :func:`_compact_bits_np`)."""
-    v = v.bitwiseAND(F.lit(0x5555555555555555))
+def _compact_bits_expr(v: str) -> str:
+    """Inverse Morton interleave (SQL twin of :func:`_compact_bits_np`)."""
+    v = f"({v}) & {0x5555555555555555}"
     for shift, mask in (
         (1, 0x3333333333333333),
         (2, 0x0F0F0F0F0F0F0F0F),
@@ -248,41 +256,41 @@ def _compact_bits_expr(v: Column) -> Column:
         (8, 0x0000FFFF0000FFFF),
         (16, 0x00000000FFFFFFFF),
     ):
-        v = (v.bitwiseOR(F.shiftright(v, shift))).bitwiseAND(F.lit(mask))
+        v = f"(({v}) | shiftright({v}, {shift})) & {mask}"
     return v
 
 
-def cell_bounds_expr(cell: Column, res: int) -> tuple[Column, Column, Column, Column]:
+def cell_bounds_expr(cell: str, res: int) -> tuple[str, str, str, str]:
     """(lat_min, lat_max, lng_min, lng_max) of a cell id at a KNOWN ``res``
-    — pure column expressions, the raster→vector direction (tile id →
-    geographic extent, e.g. emitting tile footprints for export or
-    feeding tiles back into the polygon joins).  Column twin of
-    :func:`cell_bounds` (which also derives per-row res for mixed inputs).
+    as SQL text — the raster→vector direction (tile id → geographic
+    extent, e.g. emitting tile footprints for export or feeding tiles back
+    into the polygon joins).  SQL twin of :func:`cell_bounds` (which also
+    derives per-row res for mixed inputs).
     """
-    morton = cell.bitwiseXOR(F.lit(1 << (2 * res)).cast("long"))
-    x = _compact_bits_expr(morton).cast("double")
-    y = _compact_bits_expr(F.shiftright(morton, 1)).cast("double")
-    n = float(1 << res)
-    lng_min = x / F.lit(n) * 360.0 - 180.0
-    lng_max = (x + 1) / F.lit(n) * 360.0 - 180.0
-    lat_max = F.lit(90.0) - y / F.lit(n) * 180.0
-    lat_min = F.lit(90.0) - (y + 1) / F.lit(n) * 180.0
+    morton = f"({cell}) ^ {_marker(res)}"
+    x = f"CAST({_compact_bits_expr(morton)} AS DOUBLE)"
+    y = f"CAST({_compact_bits_expr(f'shiftright({morton}, 1)')} AS DOUBLE)"
+    n = dbl(1 << res)
+    lng_min = f"{x} / {n} * 360.0D - 180.0D"
+    lng_max = f"({x} + 1) / {n} * 360.0D - 180.0D"
+    lat_max = f"90.0D - {y} / {n} * 180.0D"
+    lat_min = f"90.0D - ({y} + 1) / {n} * 180.0D"
     return lat_min, lat_max, lng_min, lng_max
 
 
 def grid_disk_expr(
-    cell_x: Column, cell_y: Column, res: int, k: int | Column,
-    ky: int | Column | None = None,
-) -> Column:
+    cell_x: str, cell_y: str, res: int, k: int | str,
+    ky: int | str | None = None,
+) -> str:
     """Array of (x, y) neighbor structs within Chebyshev distance k.
 
-    Meant to be exploded: ``F.explode(grid_disk_expr(...))``.  Longitude
+    Meant to be exploded: ``explode(<grid_disk_expr>)``.  Longitude
     wraps; latitude clamps (out-of-range rows are filtered).
-    Pure column expressions (sequence + transform + filter + flatten).
+    Pure SQL expressions (sequence + transform + filter + flatten).
 
-    ``k`` may be a COLUMN for per-row disk sizing (distance_join sizes
-    each row's disk from its own latitude — equatorial rows get ring 1,
-    only poleward rows pay wide disks).  ``ky`` makes the disk
+    ``k`` may be an SQL fragment for per-row disk sizing (distance_join
+    sizes each row's disk from its own latitude — equatorial rows get
+    ring 1, only poleward rows pay wide disks).  ``ky`` makes the disk
     ASYMMETRIC: ``k`` spans longitude (x), ``ky`` latitude (y) — a
     fixed-radius search needs far fewer lat rows than poleward lng
     columns, so the rectangle (2k+1)×(2ky+1) beats the square.
@@ -293,18 +301,15 @@ def grid_disk_expr(
     emit unique candidate pairs without a dedup shuffle.
     """
     n = 1 << res
-    kc = F.lit(k) if isinstance(k, int) else k.cast("long")
-    kyc = kc if ky is None else (F.lit(ky) if isinstance(ky, int) else ky.cast("long"))
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(-kc, kc),
-            lambda i: F.transform(
-                F.sequence(-kyc, kyc),
-                lambda j: F.struct(
-                    F.pmod(cell_x + i, F.lit(n)).alias("x"),
-                    (cell_y + j).alias("y"),
-                ),
-            ),
-        )
+
+    def _k(v: int | str) -> str:
+        return str(v) if isinstance(v, int) else f"CAST({v} AS BIGINT)"
+
+    kc = _k(k)
+    kyc = kc if ky is None else _k(ky)
+    pairs = (
+        f"flatten(transform(sequence(-({kc}), {kc}), __i -> "
+        f"transform(sequence(-({kyc}), {kyc}), __j -> struct("
+        f"pmod(({cell_x}) + __i, {n}) AS x, ({cell_y}) + __j AS y))))"
     )
-    return F.array_distinct(F.filter(pairs, lambda p: (p["y"] >= 0) & (p["y"] < n)))
+    return f"array_distinct(filter({pairs}, __p -> __p.y >= 0 AND __p.y < {n}))"

@@ -1,7 +1,8 @@
 """Geodesic + planar geometry functions.
 
-Column-expression implementations of the reference's scalar geometry library
-(reference: include/utils/geomath.cpp) so the hot path stays JVM-side:
+Spark SQL-text implementations of the reference's scalar geometry library
+(reference: include/utils/geomath.cpp) so the hot path stays JVM-side
+(builders return SQL fragments, see :mod:`navgraph_osm_spark.cells`):
 
 - ``haversine_expr``  ↔ ``geopointsDistance`` (geomath.cpp:7-21), including
   the reference's idiosyncratic ``EARTH_RADIUS = 6370.986884258304`` km
@@ -20,19 +21,20 @@ Column-expression implementations of the reference's scalar geometry library
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+from navgraph_osm_spark.cells import dbl
 
 EARTH_RADIUS_KM = 6370.986884258304  # reference include/utils/geomath.hpp:6
 
 
-def haversine_expr(lat1: Column, lng1: Column, lat2: Column, lng2: Column) -> Column:
-    """Great-circle distance in km (reference geomath.cpp:7-21)."""
-    phi1, phi2 = F.radians(lat1), F.radians(lat2)
-    dphi = F.radians(lat2 - lat1)
-    dlmb = F.radians(lng2 - lng1)
-    a = F.pow(F.sin(dphi / 2), 2) + F.cos(phi1) * F.cos(phi2) * F.pow(F.sin(dlmb / 2), 2)
-    return F.lit(2.0 * EARTH_RADIUS_KM) * F.atan2(F.sqrt(a), F.sqrt(1.0 - a))
+def haversine_expr(lat1: str, lng1: str, lat2: str, lng2: str) -> str:
+    """Great-circle distance in km as Spark SQL text (reference
+    geomath.cpp:7-21); arguments are SQL fragments."""
+    a = (
+        f"power(sin(radians(({lat2}) - ({lat1})) / 2), 2) + cos(radians({lat1})) "
+        f"* cos(radians({lat2})) * power(sin(radians(({lng2}) - ({lng1})) / 2), 2)"
+    )
+    return f"{dbl(2.0 * EARTH_RADIUS_KM)} * atan2(sqrt({a}), sqrt(1.0D - ({a})))"
 
 
 def haversine_sql(lat1: str, lng1: str, lat2: str, lng2: str) -> str:
@@ -54,26 +56,17 @@ def haversine_np(lat1, lng1, lat2, lng2) -> np.ndarray:
     return 2.0 * EARTH_RADIUS_KM * np.arctan2(np.sqrt(a), np.sqrt(1.0 - a))
 
 
-def polyline_cost_expr(geom: Column) -> Column:
+def polyline_cost_expr(geom: str) -> str:
     """Sum of haversine leg lengths over ``array<struct<lat,lng>>``.
 
     Reference ``wayCost`` (geomath.cpp:23-46) re-expressed with the
     ``aggregate``/``zip_with`` higher-order functions — no Python.
     """
-    legs = F.zip_with(
-        F.slice(geom, 1, F.size(geom) - 1),
-        F.slice(geom, 2, F.size(geom) - 1),
-        lambda p, q: _haversine_hof(p["lat"], p["lng"], q["lat"], q["lng"]),
+    legs = (
+        f"zip_with(slice({geom}, 1, size({geom}) - 1), slice({geom}, 2, size({geom}) - 1), "
+        f"(__p, __q) -> {haversine_expr('__p.lat', '__p.lng', '__q.lat', '__q.lng')})"
     )
-    return F.aggregate(legs, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _haversine_hof(lat1, lng1, lat2, lng2):
-    phi1, phi2 = F.radians(lat1), F.radians(lat2)
-    dphi = F.radians(lat2 - lat1)
-    dlmb = F.radians(lng2 - lng1)
-    a = F.pow(F.sin(dphi / 2), 2) + F.cos(phi1) * F.cos(phi2) * F.pow(F.sin(dlmb / 2), 2)
-    return F.lit(2.0 * EARTH_RADIUS_KM) * F.atan2(F.sqrt(a), F.sqrt(1.0 - a))
+    return f"aggregate({legs}, 0.0D, (__acc, __v) -> __acc + __v)"
 
 
 # ---------------------------------------------------------------------------
@@ -330,33 +323,37 @@ def polygons_intersect_pairwise_np(
     return hit
 
 
-def _ring_crossings_expr(lat: Column, lng: Column, ring: Column) -> Column:
+def ring_bounds_expr(fp: str, rings: str | None = None) -> str:
+    """``array<struct<s,e>>`` of [start, end) vertex offsets per ring of a
+    flat footprint (SQL text).  ``rings`` is an ``array<int>`` of ring
+    start offsets; null, empty or absent means one ring.  The
+    ``struct(… AS s).s`` wrappers only name the zipped fields — the
+    optimizer strips them."""
+    if rings is None:
+        starts = "array(0)"
+    else:
+        starts = f"CASE WHEN ({rings}) IS NULL OR size({rings}) = 0 THEN array(0) ELSE {rings} END"
+    ends = f"concat(slice({starts}, 2, greatest(size({starts}) - 1, 0)), array(size({fp})))"
+    return f"arrays_zip(struct({starts} AS s).s, struct({ends} AS e).e)"
+
+
+def _ring_crossings_expr(lat: str, lng: str, ring: str) -> str:
     """Crossing count of the rightward ray from (lat, lng) against ONE
-    closed ring (column expression; the kernel's exact float terms)."""
-    closed = F.concat(ring, F.slice(ring, 1, 1))
-    e1 = F.slice(closed, 1, F.size(closed) - 1)
-    e2 = F.slice(closed, 2, F.size(closed) - 1)
-    crossings = F.zip_with(
-        e1,
-        e2,
-        lambda p, q: F.when(
-            ((p["lat"] > lat) & ~(q["lat"] > lat))
-            | (~(p["lat"] > lat) & (q["lat"] > lat)),
-            F.when(
-                lng
-                < p["lng"]
-                + (lat - p["lat"]) / (q["lat"] - p["lat"]) * (q["lng"] - p["lng"]),
-                F.lit(1),
-            ).otherwise(F.lit(0)),
-        ).otherwise(F.lit(0)),
+    closed ring (SQL text; the kernel's exact float terms)."""
+    closed = f"concat({ring}, slice({ring}, 1, 1))"
+    e1 = f"slice({closed}, 1, size({closed}) - 1)"
+    e2 = f"slice({closed}, 2, size({closed}) - 1)"
+    above_p, above_q = f"(__p.lat > ({lat}))", f"(__q.lat > ({lat}))"
+    xint = f"__p.lng + (({lat}) - __p.lat) / (__q.lat - __p.lat) * (__q.lng - __p.lng)"
+    crossing = (
+        f"CASE WHEN ({above_p} AND NOT {above_q}) OR (NOT {above_p} AND {above_q}) "
+        f"THEN CASE WHEN ({lng}) < {xint} THEN 1 ELSE 0 END ELSE 0 END"
     )
-    return F.aggregate(crossings, F.lit(0), lambda a, v: a + v)
+    return f"aggregate(zip_with({e1}, {e2}, (__p, __q) -> {crossing}), 0, (__a, __v) -> __a + __v)"
 
 
-def point_in_ring_expr(
-    lat: Column, lng: Column, fp: Column, rings: Column | None = None
-) -> Column:
-    """PURE-COLUMN even-odd ray cast: is the point (``lat``, ``lng``)
+def point_in_ring_expr(lat: str, lng: str, fp: str, rings: str | None = None) -> str:
+    """Even-odd ray cast as SQL text: is the point (``lat``, ``lng``)
     inside the footprint ``fp`` (``array<struct<lat,lng>>``)?
 
     Reproduces :func:`points_in_polygon_np`'s exact float expression —
@@ -369,30 +366,17 @@ def point_in_ring_expr(
     Used by :func:`operators.spatial_join.polygon_to_cells` for exact
     polyfill; open rings close via the appended first vertex.
 
-    ``rings`` (optional ring start offsets column, ``array<int>``) sums
-    crossings across ring slices — even-odd hole semantics, the column
-    twin of the numpy kernel's ``ring_starts``.
+    ``rings`` (optional ring start offsets, ``array<int>``) sums
+    crossings across ring slices — even-odd hole semantics, the SQL twin
+    of the numpy kernel's ``ring_starts``.
     """
     if rings is None:
-        total = _ring_crossings_expr(lat, lng, fp)
-        return F.pmod(total, F.lit(2)) == 1
-    n = F.size(fp)
-    starts = F.when(
-        rings.isNull() | (F.size(rings) == 0), F.array(F.lit(0))
-    ).otherwise(rings)
-    ends = F.concat(
-        F.slice(starts, 2, F.greatest(F.size(starts) - 1, F.lit(0))),
-        F.array(n),
+        return f"pmod({_ring_crossings_expr(lat, lng, fp)}, 2) = 1"
+    per_ring = (
+        f"transform({ring_bounds_expr(fp, rings)}, __b -> "
+        f"{_ring_crossings_expr(lat, lng, f'slice({fp}, __b.s + 1, __b.e - __b.s)')})"
     )
-    bounds = F.arrays_zip(starts.alias("s"), ends.alias("e"))
-    per_ring = F.transform(
-        bounds,
-        lambda b: _ring_crossings_expr(
-            lat, lng, F.slice(fp, b["s"] + 1, b["e"] - b["s"])
-        ),
-    )
-    total = F.aggregate(per_ring, F.lit(0), lambda a, v: a + v)
-    return F.pmod(total, F.lit(2)) == 1
+    return f"pmod(aggregate({per_ring}, 0, (__a, __v) -> __a + __v), 2) = 1"
 
 
 def points_in_polygon_np(

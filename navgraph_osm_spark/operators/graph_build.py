@@ -25,7 +25,7 @@ row_number, so no single-partition bottleneck at 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from navgraph_osm_spark.cells import cell_expr
@@ -33,6 +33,7 @@ from navgraph_osm_spark.functions.geo import haversine_expr
 from navgraph_osm_spark.sources.synth import HIGHWAY_ALLOWED
 
 MAX_SEGMENTS_PER_WAY = 1 << 19  # edge-id packing bound (OSM max nodes/way = 2000)
+_ALLOWED = ", ".join(f"'{h}'" for h in HIGHWAY_ALLOWED)
 
 
 def filter_ways(ways: DataFrame) -> DataFrame:
@@ -44,22 +45,19 @@ def filter_ways(ways: DataFrame) -> DataFrame:
     """
     if "tags" in ways.columns:
         return filter_ways_tags(ways)
-    return ways.filter(F.col("highway").isin(HIGHWAY_ALLOWED)).select(
-        F.col("id").alias("way_id"),
-        F.coalesce(F.col("oneway").isin("yes", "1"), F.lit(False)).alias("oneway"),
+    return ways.filter(f"highway IN ({_ALLOWED})").selectExpr(
+        "id AS way_id", "coalesce(oneway IN ('yes', '1'), false) AS oneway"
     )
 
 
 def filter_ways_tags(ways: DataFrame, tags: str = "tags") -> DataFrame:
     """F1/F2 over a ``tags: map<string,string>`` column (reference
     worker.hpp:94-106 highway allowlist, :110-122 oneway ∈ {yes, 1})."""
-    hw = F.try_element_at(F.col(tags), F.lit("highway"))
-    ow = F.try_element_at(F.col(tags), F.lit("oneway"))
-    return ways.filter(hw.isin(HIGHWAY_ALLOWED)).select(
-        F.col("id").alias("way_id"),
+    return ways.filter(f"try_element_at({tags}, 'highway') IN ({_ALLOWED})").selectExpr(
+        "id AS way_id",
         # a missing oneway tag means two-way (reference worker.hpp:110-122
         # defaults isOneWay to false)
-        F.coalesce(ow.isin("yes", "1"), F.lit(False)).alias("oneway"),
+        f"coalesce(try_element_at({tags}, 'oneway') IN ('yes', '1'), false) AS oneway",
     )
 
 
@@ -72,16 +70,10 @@ def node_usage(way_nodes_kept: DataFrame) -> DataFrame:
 
 def _kept_way_nodes(ways: DataFrame, way_nodes: DataFrame) -> DataFrame:
     kept = filter_ways(ways)
-    wn = way_nodes.join(kept, "way_id")
-    w_span = Window.partitionBy("way_id")
-    return (
-        wn.withColumn("min_seq", F.min("seq").over(w_span))
-        .withColumn("max_seq", F.max("seq").over(w_span))
-        .withColumn(
-            "is_endpoint",
-            (F.col("seq") == F.col("min_seq")) | (F.col("seq") == F.col("max_seq")),
-        )
-    )
+    return way_nodes.join(kept, "way_id").withColumns({
+        "min_seq": F.expr("min(seq) OVER (PARTITION BY way_id)"),
+        "max_seq": F.expr("max(seq) OVER (PARTITION BY way_id)"),
+    }).withColumn("is_endpoint", F.expr("seq = min_seq OR seq = max_seq"))
 
 
 def build_edges(
@@ -100,19 +92,14 @@ def build_edges(
     # Spark shares no subtrees), which doubled every upstream scan and
     # shuffle.  The node join is keyed the same way, so it reuses the
     # window's node_id partitioning.
-    w_node = Window.partitionBy("node_id")
-    occ = wn.select(
+    occ = wn.selectExpr(
         "way_id", "seq", "node_id", "oneway", "min_seq", "max_seq",
-        F.sum(F.when(F.col("is_endpoint"), 2).otherwise(1))
-        .over(w_node)
-        .alias("used"),
+        "sum(CASE WHEN is_endpoint THEN 2 ELSE 1 END) OVER (PARTITION BY node_id) AS used",
     ).join(
         # deliberate SHUFFLE_HASH (guide §3): the node dim is modest per
         # partition and pre-sorted output is not needed — the sort-merge
         # default pays two sorts of the full occurrence relation
-        nodes.select(F.col("id").alias("node_id"), "lat", "lng").hint(
-            "shuffle_hash"
-        ),
+        nodes.selectExpr("id AS node_id", "lat", "lng").hint("shuffle_hash"),
         "node_id",
     )
 
@@ -122,109 +109,78 @@ def build_edges(
     # segment rows are seq-contiguous, so the way-level lag equals the
     # segment-level lag everywhere except the segment-opening duplicate of
     # a split row, which is zeroed explicitly below — one window sort less.
-    w_seq = Window.partitionBy("way_id").orderBy("seq")
-    split = F.col("used") > 1
-    occ = occ.withColumn(
-        "cut_before",
-        F.coalesce(
-            F.sum(split.cast("int")).over(
-                w_seq.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
+    w_seq = "PARTITION BY way_id ORDER BY seq"
+    occ = occ.withColumns({
+        "cut_before": F.expr(
+            f"coalesce(sum(CAST(used > 1 AS INT)) OVER ({w_seq}"
+            " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)"
         ),
-    ).withColumn("prev_lat", F.lag("lat").over(w_seq)).withColumn(
-        "prev_lng", F.lag("lng").over(w_seq)
-    )
+        "prev_lat": F.expr(f"lag(lat) OVER ({w_seq})"),
+        "prev_lng": F.expr(f"lag(lng) OVER ({w_seq})"),
+    })
     # membership: split rows close segment (cut_before-1) and open (cut_before);
     # non-split rows belong to (cut_before-1) only.
-    seg_array = F.when(
-        split,
-        F.filter(
-            F.array(
-                F.when(F.col("seq") > F.col("min_seq"), F.col("cut_before") - 1),
-                F.when(F.col("seq") < F.col("max_seq"), F.col("cut_before")),
-            ),
-            lambda x: x.isNotNull(),
-        ),
-    ).otherwise(F.array(F.col("cut_before") - 1))
-    occ = occ.withColumn("seg", F.explode(seg_array))
+    occ = occ.withColumn("seg", F.expr(
+        "explode(CASE WHEN used > 1 THEN filter(array("
+        "CASE WHEN seq > min_seq THEN cut_before - 1 END, "
+        "CASE WHEN seq < max_seq THEN cut_before END), __s -> __s IS NOT NULL) "
+        "ELSE array(cut_before - 1) END)"
+    ))
 
-    leg = F.when(
-        F.col("prev_lat").isNull()
-        # a split row opening segment `cut_before` is that segment's first
-        # row — its way-level lag belongs to the previous segment
-        | (split & (F.col("seg") == F.col("cut_before"))),
-        F.lit(0.0),
-    ).otherwise(
-        haversine_expr(F.col("prev_lat"), F.col("prev_lng"), F.col("lat"), F.col("lng"))
+    # a split row opening segment `cut_before` is that segment's first row —
+    # its way-level lag belongs to the previous segment
+    leg = (
+        "CASE WHEN prev_lat IS NULL OR (used > 1 AND seg = cut_before) THEN 0.0D "
+        f"ELSE {haversine_expr('prev_lat', 'prev_lng', 'lat', 'lng')} END"
     )
     # W2 + A6: one groupBy per (way, segment); geometry inline, cost from
     # legs.  hash(way_id) satisfies the (way_id, seg) clustering, so the
     # aggregate runs exchange-free on the window's partitioning, and rows
     # arrive seq-sorted — the float summation order of the previous
     # per-segment window formulation is preserved exactly.
-    segs = (
-        occ.withColumn("leg_cost", leg)
-        .groupBy("way_id", "seg")
-        .agg(
-            F.first("oneway").alias("oneway"),
-            F.sum("leg_cost").alias("cost"),
-            F.count("*").alias("n_points"),
-            F.min_by("node_id", "seq").alias("src_node"),
-            F.min_by("lat", "seq").alias("src_lat"),
-            F.min_by("lng", "seq").alias("src_lng"),
-            F.max_by("node_id", "seq").alias("tgt_node"),
-            F.max_by("lat", "seq").alias("tgt_lat"),
-            F.max_by("lng", "seq").alias("tgt_lng"),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("seq", "lat", "lng"))),
-                lambda s: F.struct(s["lat"].alias("lat"), s["lng"].alias("lng")),
-            ).alias("geom"),
-        )
-    )
+    segs = occ.withColumn("leg_cost", F.expr(leg)).groupBy("way_id", "seg").agg(*map(F.expr, [
+        "first(oneway) AS oneway",
+        "sum(leg_cost) AS cost",
+        "count(*) AS n_points",
+        "min_by(node_id, seq) AS src_node",
+        "min_by(lat, seq) AS src_lat",
+        "min_by(lng, seq) AS src_lng",
+        "max_by(node_id, seq) AS tgt_node",
+        "max_by(lat, seq) AS tgt_lat",
+        "max_by(lng, seq) AS tgt_lng",
+        "transform(array_sort(collect_list(struct(seq, lat, lng))),"
+        " __s -> struct(__s.lat AS lat, __s.lng AS lng)) AS geom",
+    ]))
 
     # §2.6 reverse edges via a 1-or-2-element explode instead of a union of
     # two branches — a union re-plans the whole upstream pipeline per
     # branch (same fan-out problem as the usage join-back)
-    rev = F.col("direction") == 1
+    def _dir(fwd: str, rev: str, name: str) -> str:
+        return f"CASE WHEN direction = 1 THEN {rev} ELSE {fwd} END AS {name}"
+
     edges = segs.withColumn(
-        "direction",
-        F.explode(
-            F.when(F.col("oneway"), F.array(F.lit(0))).otherwise(
-                F.array(F.lit(0), F.lit(1))
-            )
-        ),
-    ).select(
-        "way_id",
-        "seg",
-        "oneway",
-        "cost",
-        "n_points",
-        F.when(rev, F.col("tgt_node")).otherwise(F.col("src_node")).alias("src_node"),
-        F.when(rev, F.col("tgt_lat")).otherwise(F.col("src_lat")).alias("src_lat"),
-        F.when(rev, F.col("tgt_lng")).otherwise(F.col("src_lng")).alias("src_lng"),
-        F.when(rev, F.col("src_node")).otherwise(F.col("tgt_node")).alias("tgt_node"),
-        F.when(rev, F.col("src_lat")).otherwise(F.col("tgt_lat")).alias("tgt_lat"),
-        F.when(rev, F.col("src_lng")).otherwise(F.col("tgt_lng")).alias("tgt_lng"),
-        F.when(rev, F.reverse("geom")).otherwise(F.col("geom")).alias("geom"),
+        "direction", F.expr("explode(CASE WHEN oneway THEN array(0) ELSE array(0, 1) END)")
+    ).selectExpr(
+        "way_id", "seg", "oneway", "cost", "n_points",
+        _dir("src_node", "tgt_node", "src_node"),
+        _dir("src_lat", "tgt_lat", "src_lat"),
+        _dir("src_lng", "tgt_lng", "src_lng"),
+        _dir("tgt_node", "src_node", "tgt_node"),
+        _dir("tgt_lat", "src_lat", "tgt_lat"),
+        _dir("tgt_lng", "src_lng", "tgt_lng"),
+        _dir("geom", "reverse(geom)", "geom"),
         "direction",
     )
 
-    edges = (
-        edges.withColumn("src_cell", cell_expr(F.col("src_lat"), F.col("src_lng"), res))
-        .withColumn("tgt_cell", cell_expr(F.col("tgt_lat"), F.col("tgt_lng"), res))
-        .withColumn("is_border", F.col("src_cell") != F.col("tgt_cell"))
-        .withColumn(
-            "edge_id",
-            F.col("way_id") * F.lit(2 * MAX_SEGMENTS_PER_WAY)
-            + F.col("seg") * 2
-            + F.col("direction"),
-        )
-    )
-    return edges.select(
-        "edge_id", "way_id", "seg", "direction", "oneway",
+    return edges.withColumns({
+        "src_cell": F.expr(cell_expr("src_lat", "src_lng", res)),
+        "tgt_cell": F.expr(cell_expr("tgt_lat", "tgt_lng", res)),
+    }).selectExpr(
+        f"way_id * {2 * MAX_SEGMENTS_PER_WAY} + seg * 2 + direction AS edge_id",
+        "way_id", "seg", "direction", "oneway",
         "src_node", "src_lat", "src_lng", "tgt_node", "tgt_lat", "tgt_lng",
-        "cost", "n_points", "geom", "src_cell", "tgt_cell", "is_border",
+        "cost", "n_points", "geom", "src_cell", "tgt_cell",
+        "src_cell != tgt_cell AS is_border",
     )
 
 

@@ -21,7 +21,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from navgraph_osm_spark.cells import cell_from_xy_expr, grid_disk_expr, xy_expr
+from navgraph_osm_spark.cells import cell_from_xy_expr, dbl, grid_disk_expr, xy_expr
 from navgraph_osm_spark.functions.geo import EARTH_RADIUS_KM, haversine_expr
 
 
@@ -52,29 +52,19 @@ def knn_join(
     """
     from navgraph_osm_spark.sources.tables import spread_scan
 
-    px, py = xy_expr(F.col("lat"), F.col("lng"), res)
+    px, py = xy_expr("lat", "lng", res)
     # the equi join probes the points side inside its scan tasks (the disk
     # side broadcasts) — spread an unsplittable single-file point input
-    pts = spread_scan(points).select(
-        F.col(point_id),
-        F.col("lat").alias("p_lat"),
-        F.col("lng").alias("p_lng"),
-        cell_from_xy_expr(px, py, res).alias("cell"),
+    pts = spread_scan(points).selectExpr(
+        point_id, "lat AS p_lat", "lng AS p_lng",
+        f"{cell_from_xy_expr(px, py, res)} AS cell",
     )
-    qx, qy = xy_expr(F.col("lat"), F.col("lng"), res)
-    qrs = (
-        queries.select(
-            F.col(query_id),
-            F.col("lat").alias("q_lat"),
-            F.col("lng").alias("q_lng"),
-            F.explode(grid_disk_expr(qx, qy, res, ring)).alias("nb"),
-        )
-        .withColumn("cell", cell_from_xy_expr(F.col("nb.x"), F.col("nb.y"), res))
-        .drop("nb")
-    )
+    qrs = queries.selectExpr(
+        query_id, "lat AS q_lat", "lng AS q_lng",
+        f"explode({grid_disk_expr(px, py, res, ring)}) AS nb",
+    ).selectExpr(query_id, "q_lat", "q_lng", f"{cell_from_xy_expr('nb.x', 'nb.y', res)} AS cell")
     cand = qrs.join(pts, "cell").withColumn(
-        "dist_km",
-        haversine_expr(F.col("q_lat"), F.col("q_lng"), F.col("p_lat"), F.col("p_lng")),
+        "dist_km", F.expr(haversine_expr("q_lat", "q_lng", "p_lat", "p_lng"))
     )
     # candidate pairs are unique by construction — a point lies in exactly
     # one cell and grid_disk_expr yields each cell at most once per query
@@ -220,8 +210,7 @@ def knn_join_bruteforce(
         F.col(query_id), F.col("lat").alias("q_lat"), F.col("lng").alias("q_lng")
     )
     cand = qrs.crossJoin(pts).withColumn(
-        "dist_km",
-        haversine_expr(F.col("q_lat"), F.col("q_lng"), F.col("p_lat"), F.col("p_lng")),
+        "dist_km", F.expr(haversine_expr("q_lat", "q_lng", "p_lat", "p_lng"))
     )
     w = Window.partitionBy(query_id).orderBy(F.col("dist_km").asc(), F.col(point_id).asc())
     return (
@@ -296,25 +285,18 @@ def distance_join(
         r_deg = radius_km / ((math.pi / 180.0) * EARTH_RADIUS_KM)
         r_rad = radius_km / EARTH_RADIUS_KM
         lng_extent_deg = 360.0 / (1 << res)
-        poleward = F.least(F.lit(90.0), F.abs(F.col("lat")) + F.lit(r_deg))
+        poleward = f"least(90.0D, abs(lat) + {dbl(r_deg)})"
         # |Δλ| bound between the two POINTS of a qualifying pair (see
         # docstring); asin argument clamped at 1 → 180° → full wrap
-        dlmb_deg = F.degrees(
-            F.lit(2.0)
-            * F.asin(
-                F.least(
-                    F.lit(1.0),
-                    F.lit(math.sin(r_rad / 2.0))
-                    / F.greatest(F.cos(F.radians(poleward)), F.lit(1e-300)),
-                )
-            )
-        )
-        ring_col = F.least(
-            F.floor(dlmb_deg / F.lit(lng_extent_deg)).cast("long") + 1,
-            F.lit(1 << res).cast("long"),
+        dlmb_deg = (
+            f"degrees(2.0D * asin(least(1.0D, {dbl(math.sin(r_rad / 2.0))}"
+            f" / greatest(cos(radians({poleward})), 1e-300D))))"
         )
         # asymmetric disk: lng columns widen poleward, lat rows never do
-        ring = ring_col
+        ring: int | str = (
+            f"least(CAST(floor({dlmb_deg} / {dbl(lng_extent_deg)}) AS BIGINT) + 1,"
+            f" CAST({1 << res} AS BIGINT))"
+        )
         ring_y: int | None = min(int(radius_km // lat_extent_km) + 1, 1 << res)
     else:
         if max_abs_lat is None:
@@ -327,38 +309,22 @@ def distance_join(
             max_abs_lat = float(row[0] or 0.0)
         ring = min(min_ring_for_radius(radius_km, res, max_abs_lat) + 1, 1 << res)
         ring_y = None
-    lx, ly = xy_expr(F.col("lat"), F.col("lng"), res)
-    lhs = left.select(
-        F.col(left_id),
-        F.col("lat").alias("l_lat"),
-        F.col("lng").alias("l_lng"),
-        cell_from_xy_expr(lx, ly, res).alias("cell"),
+    x, y = xy_expr("lat", "lng", res)
+    lhs = left.selectExpr(
+        left_id, "lat AS l_lat", "lng AS l_lng", f"{cell_from_xy_expr(x, y, res)} AS cell"
     )
     # the disk explode + per-candidate haversine all run inside the right
     # side's scan tasks; an unsplittable single-file dim input would pin
     # the whole join to one core (no-op when the scan is already parallel)
     from navgraph_osm_spark.sources.tables import spread_scan
 
-    right = spread_scan(right)
-    rx, ry = xy_expr(F.col("lat"), F.col("lng"), res)
-    rhs = (
-        right.select(
-            F.col(right_id),
-            F.col("lat").alias("r_lat"),
-            F.col("lng").alias("r_lng"),
-            F.explode(grid_disk_expr(rx, ry, res, ring, ring_y)).alias("nb"),
-        )
-        .withColumn("cell", cell_from_xy_expr(F.col("nb.x"), F.col("nb.y"), res))
-        .drop("nb")
-    )
+    rhs = spread_scan(right).selectExpr(
+        right_id, "lat AS r_lat", "lng AS r_lng",
+        f"explode({grid_disk_expr(x, y, res, ring, ring_y)}) AS nb",
+    ).selectExpr(right_id, "r_lat", "r_lng", f"{cell_from_xy_expr('nb.x', 'nb.y', res)} AS cell")
     return (
         lhs.join(rhs, "cell")
-        .withColumn(
-            "dist_km",
-            haversine_expr(
-                F.col("l_lat"), F.col("l_lng"), F.col("r_lat"), F.col("r_lng")
-            ),
-        )
-        .filter(F.col("dist_km") <= F.lit(float(radius_km)))
-        .select(left_id, right_id, "dist_km")
+        .selectExpr(left_id, right_id,
+                    f"{haversine_expr('l_lat', 'l_lng', 'r_lat', 'r_lng')} AS dist_km")
+        .filter(f"dist_km <= {dbl(radius_km)}")
     )

@@ -58,7 +58,7 @@ def adaptive_cell_split(
     caller is about to apply anyway.
     """
     finest = res + max_extra_levels
-    out = df.withColumn("__finest", cell_expr(F.col(lat), F.col(lng), finest))
+    out = df.withColumn("__finest", F.expr(cell_expr(lat, lng, finest)))
 
     # ONE aggregation over the data; the descent below touches only `hist`
     hist = (

@@ -26,26 +26,34 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from navgraph_osm_spark.cells import cell_expr, cell_from_xy_expr, xy_expr
-from navgraph_osm_spark.functions.geo import points_in_polygon_np
+from navgraph_osm_spark.cells import cell_expr, cell_from_xy_expr, dbl, xy_expr
+from navgraph_osm_spark.functions.geo import points_in_polygon_np, ring_bounds_expr
+
+
+def _q(name: str) -> str:
+    """Backtick-quote a column name for a ``selectExpr`` pass-through."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def assign_cells(df: DataFrame, res: int, lat: str = "lat", lng: str = "lng",
                  out: str = "cell") -> DataFrame:
     """Point rows → + hierarchical cell column (pure codegen, no Python)."""
-    return df.withColumn(out, cell_expr(F.col(lat), F.col(lng), res))
+    return df.withColumn(out, F.expr(cell_expr(lat, lng, res)))
+
+
+_BBOX = ("lat_min", "lat_max", "lng_min", "lng_max")
 
 
 def footprint_bbox(df: DataFrame, fp: str = "footprint") -> DataFrame:
     """Polygon rows → bbox columns via array higher-order functions."""
-    lats = F.transform(F.col(fp), lambda p: p["lat"])
-    lngs = F.transform(F.col(fp), lambda p: p["lng"])
-    return (
-        df.withColumn("lat_min", F.array_min(lats))
-        .withColumn("lat_max", F.array_max(lats))
-        .withColumn("lng_min", F.array_min(lngs))
-        .withColumn("lng_max", F.array_max(lngs))
-    )
+    lats = f"transform({fp}, __p -> __p.lat)"
+    lngs = f"transform({fp}, __p -> __p.lng)"
+    return df.withColumns({
+        "lat_min": F.expr(f"array_min({lats})"),
+        "lat_max": F.expr(f"array_max({lats})"),
+        "lng_min": F.expr(f"array_min({lngs})"),
+        "lng_max": F.expr(f"array_max({lngs})"),
+    })
 
 
 def covering_cells(df: DataFrame, res: int, fp: str = "footprint",
@@ -54,7 +62,7 @@ def covering_cells(df: DataFrame, res: int, fp: str = "footprint",
     """Explode each polygon row into its bbox-covering cell ids.
 
     This is the raster↔vector tiling primitive: for images, the footprint's
-    covering cells ARE its tile assignments.  Pure column expressions.
+    covering cells ARE its tile assignments.  Pure SQL expressions.
     ``keep_bbox=True`` retains the lat/lng min/max columns (the spatial join
     uses them as a codegen-side candidate prefilter); ``keep_xy=True``
     retains the per-cell ``cx``/``cy`` grid coordinates (the overlay join's
@@ -70,62 +78,41 @@ def covering_cells(df: DataFrame, res: int, fp: str = "footprint",
     them.  For single-ring rows (null / ≤1 offsets) and for hole-in-outer
     donuts the set is identical to the bbox covering, so existing
     single-bbox consumers are unaffected.  The bbox columns stay the
-    UNION bbox (prefilter semantics unchanged); still pure column
+    UNION bbox (prefilter semantics unchanged); still pure SQL
     expressions (nested sequence transforms + ``array_distinct``), but
     the per-row cell set materializes as one array — bounded by the
     footprint covering size, fine for image/building footprints.
     """
     df = footprint_bbox(df, fp)
+    dropped = ({"cx", "cy"} if not keep_xy else set()) | (
+        set(_BBOX) if not keep_bbox else set()
+    )
     if rings is not None and rings in df.columns:
         if keep_xy:
             raise ValueError("keep_xy is not supported with per-ring coverings")
-        n = F.size(F.col(fp))
-        starts = F.when(
-            F.col(rings).isNull() | (F.size(F.col(rings)) == 0),
-            F.array(F.lit(0)),
-        ).otherwise(F.col(rings))
-        ends = F.concat(
-            F.slice(starts, 2, F.greatest(F.size(starts) - 1, F.lit(0))),
-            F.array(n),
+        sub = f"slice({fp}, __b.s + 1, __b.e - __b.s)"
+        lats = f"transform({sub}, __p -> __p.lat)"
+        lngs = f"transform({sub}, __p -> __p.lng)"
+        x0, y_top = xy_expr(f"array_max({lats})", f"array_min({lngs})", res)
+        x1, y_bot = xy_expr(f"array_min({lats})", f"array_max({lngs})", res)
+        ring_cells = (
+            f"flatten(transform(sequence({x0}, {x1}), __x -> transform("
+            f"sequence({y_top}, {y_bot}), __y -> {cell_from_xy_expr('__x', '__y', res)})))"
         )
-
-        def _ring_cells(b):
-            sub = F.slice(F.col(fp), b["s"] + 1, b["e"] - b["s"])
-            lats = F.transform(sub, lambda p: p["lat"])
-            lngs = F.transform(sub, lambda p: p["lng"])
-            x0, y_top = xy_expr(F.array_max(lats), F.array_min(lngs), res)
-            x1, y_bot = xy_expr(F.array_min(lats), F.array_max(lngs), res)
-            return F.flatten(
-                F.transform(
-                    F.sequence(x0, x1),
-                    lambda x: F.transform(
-                        F.sequence(y_top, y_bot),
-                        lambda y: cell_from_xy_expr(x, y, res),
-                    ),
-                )
-            )
-
-        bounds = F.arrays_zip(starts.alias("s"), ends.alias("e"))
-        df = df.withColumn(
-            out,
-            F.explode(F.array_distinct(F.flatten(F.transform(bounds, _ring_cells)))),
+        cells = (
+            f"explode(array_distinct(flatten(transform("
+            f"{ring_bounds_expr(fp, rings)}, __b -> {ring_cells}))))"
         )
-        if not keep_bbox:
-            df = df.drop("lat_min", "lat_max", "lng_min", "lng_max")
-        return df
-    x0, y_at_latmax = xy_expr(F.col("lat_max"), F.col("lng_min"), res)
-    x1, y_at_latmin = xy_expr(F.col("lat_min"), F.col("lng_max"), res)
-    # y grows north→south: lat_max → smaller y
-    df = (
-        df.withColumn("cx", F.explode(F.sequence(x0, x1)))
-        .withColumn("cy", F.explode(F.sequence(y_at_latmax, y_at_latmin)))
-        .withColumn(out, cell_from_xy_expr(F.col("cx"), F.col("cy"), res))
-    )
-    if not keep_xy:
-        df = df.drop("cx", "cy")
-    if not keep_bbox:
-        df = df.drop("lat_min", "lat_max", "lng_min", "lng_max")
-    return df
+    else:
+        x0, y_at_latmax = xy_expr("lat_max", "lng_min", res)
+        x1, y_at_latmin = xy_expr("lat_min", "lng_max", res)
+        # y grows north→south: lat_max → smaller y
+        df = df.withColumn("cx", F.expr(f"explode(sequence({x0}, {x1}))")).withColumn(
+            "cy", F.expr(f"explode(sequence({y_at_latmax}, {y_at_latmin}))")
+        )
+        cells = cell_from_xy_expr("cx", "cy", res)
+    keep = [_q(c) for c in df.columns if c not in dropped and c != out]
+    return df.selectExpr(*keep, f"{cells} AS {_q(out)}")
 
 
 PER_CELL_STATS_SCHEMA = "cell long, n_rows long, avg_lat double, avg_lng double"
@@ -229,29 +216,21 @@ def polygon_to_cells(
     if mode == "exact_overlap":
         if has_rings:
             # one boundary row PER RING: explode ring slices, rasterize each
-            n_fp = F.size(F.col(fp))
-            starts = F.when(
-                F.col(rings).isNull() | (F.size(F.col(rings)) == 0),
-                F.array(F.lit(0)),
-            ).otherwise(F.col(rings))
-            ends = F.concat(
-                F.slice(starts, 2, F.greatest(F.size(starts) - 1, F.lit(0))),
-                F.array(n_fp),
+            ring_rows = polygons.selectExpr(
+                poly_id, fp, f"explode({ring_bounds_expr(fp, rings)}) AS __b"
             )
-            b = F.explode(F.arrays_zip(starts.alias("s"), ends.alias("e")))
-            ring_rows = polygons.select(F.col(poly_id), F.col(fp), b.alias("__b"))
-            sub = F.slice(F.col(fp), F.col("__b.s") + 1,
-                          F.col("__b.e") - F.col("__b.s"))
+            sub = f"slice({fp}, __b.s + 1, __b.e - __b.s)"
             boundary = polyline_to_cells(
-                ring_rows.select(
-                    poly_id, F.concat(sub, F.slice(sub, 1, 1)).alias("geometry")
+                ring_rows.selectExpr(
+                    poly_id, f"concat({sub}, slice({sub}, 1, 1)) AS geometry"
                 ),
                 res, line_id=poly_id,
             ).distinct()  # seam cells shared by two rings appear once
         else:
-            closed = F.concat(F.col(fp), F.slice(F.col(fp), 1, 1))
             boundary = polyline_to_cells(
-                polygons.select(poly_id, closed.alias("geometry")),
+                polygons.selectExpr(
+                    poly_id, f"concat({fp}, slice({fp}, 1, 1)) AS geometry"
+                ),
                 res, line_id=poly_id,
             )
         interior = polygon_to_cells(polygons, res, poly_id, fp, mode="center",
@@ -265,27 +244,22 @@ def polygon_to_cells(
     if has_rings:
         # per-ring coverings would DROP hole-only candidate cells — fine:
         # hole cells are excluded by parity anyway, and separated shells
-        # cover only their own cells (tight)
-        base = polygons.select(poly_id, fp, rings)
-        cov = covering_cells(base, res, fp, keep_bbox=True, rings=rings)
-        # per-ring covering path has no cx/cy: rebuild from the cell id is
-        # avoidable — recompute center from cell bounds expr instead
+        # cover only their own cells (tight); the per-ring covering has no
+        # cx/cy, so the cell center comes from the cell bounds
         from navgraph_osm_spark.cells import cell_bounds_expr
 
-        lat_min_c, lat_max_c, lng_min_c, lng_max_c = cell_bounds_expr(
-            F.col("cell"), res
-        )
-        center_lat = (lat_min_c + lat_max_c) / F.lit(2.0)
-        center_lng = (lng_min_c + lng_max_c) / F.lit(2.0)
-        return cov.filter(
-            point_in_ring_expr(center_lat, center_lng, F.col(fp), F.col(rings))
-        ).select(poly_id, "cell")
-    cov = covering_cells(polygons.select(poly_id, fp), res, fp, keep_xy=True)
-    center_lat = F.lit(90.0) - (F.col("cy") + F.lit(0.5)) * F.lit(180.0 / n)
-    center_lng = (F.col("cx") + F.lit(0.5)) * F.lit(360.0 / n) - F.lit(180.0)
-    return cov.filter(point_in_ring_expr(center_lat, center_lng, F.col(fp))).select(
-        poly_id, "cell"
-    )
+        cov = covering_cells(polygons.select(poly_id, fp, rings), res, fp,
+                             keep_bbox=True, rings=rings)
+        lat_min_c, lat_max_c, lng_min_c, lng_max_c = cell_bounds_expr("cell", res)
+        center_lat = f"(({lat_min_c}) + ({lat_max_c})) / 2.0D"
+        center_lng = f"(({lng_min_c}) + ({lng_max_c})) / 2.0D"
+        inside = point_in_ring_expr(center_lat, center_lng, fp, rings)
+    else:
+        cov = covering_cells(polygons.select(poly_id, fp), res, fp, keep_xy=True)
+        center_lat = f"90.0D - (cy + 0.5D) * {dbl(180.0 / n)}"
+        center_lng = f"(cx + 0.5D) * {dbl(360.0 / n)} - 180.0D"
+        inside = point_in_ring_expr(center_lat, center_lng, fp)
+    return cov.filter(inside).select(poly_id, "cell")
 
 
 def polyline_to_cells(
@@ -326,63 +300,51 @@ def polyline_to_cells(
     Output (line_id, cell), unique per row by construction.
     """
     n = 1 << res
-    nf = float(n)
+    nf = dbl(n)
 
     def _gx(p):
-        return (p["lng"] + F.lit(180.0)) / F.lit(360.0) * F.lit(nf)
+        return f"(({p}.lng + 180.0D) / 360.0D * {nf})"
 
     def _gy(p):
-        return (F.lit(90.0) - p["lat"]) / F.lit(180.0) * F.lit(nf)
+        return f"((90.0D - {p}.lat) / 180.0D * {nf})"
 
     def _clamp(v):
-        return F.greatest(F.lit(0).cast("long"),
-                          F.least(F.lit(n - 1).cast("long"), v.cast("long")))
+        return f"greatest(CAST(0 AS BIGINT), least(CAST({n - 1} AS BIGINT), CAST({v} AS BIGINT)))"
 
-    def _segment_cells(p, q):
-        x0, y0, x1, y1 = _gx(p), _gy(p), _gx(q), _gy(q)
-        xs, xe = F.least(x0, x1), F.greatest(x0, x1)
-        cs, ce = _clamp(F.floor(xs)), _clamp(F.floor(xe))
+    # per segment (__p, __q): walk the grid columns __c of its x-extent
+    x0, y0, x1, y1 = _gx("__p"), _gy("__p"), _gx("__q"), _gy("__q")
+    xs, xe = f"least({x0}, {x1})", f"greatest({x0}, {x1})"
+    cs, ce = _clamp(f"floor({xs})"), _clamp(f"floor({xe})")
+    xa = f"greatest({xs}, CAST(__c AS DOUBLE))"
+    xb = f"least({xe}, CAST(__c AS DOUBLE) + 1.0D)"
+    # y at xa / xb — linear in x; vertical segments take the full y-extent
+    # (the guard keeps the division unevaluated)
+    def _y_at(x: str, vertical: str) -> str:
+        return (
+            f"CASE WHEN {x1} = {x0} THEN {vertical}({y0}, {y1}) "
+            f"ELSE {y0} + ({x} - {x0}) / ({x1} - {x0}) * ({y1} - {y0}) END"
+        )
 
-        def _col_cells(c):
-            cf = c.cast("double")
-            xa = F.greatest(xs, cf)
-            xb = F.least(xe, cf + F.lit(1.0))
-            # y at xa / xb — linear in x; vertical segments take the full
-            # y-extent (the guard keeps the division unevaluated)
-            vert = x1 == x0
-            t_a = (xa - x0) / (x1 - x0)
-            t_b = (xb - x0) / (x1 - x0)
-            ya = F.when(vert, F.least(y0, y1)).otherwise(y0 + t_a * (y1 - y0))
-            yb = F.when(vert, F.greatest(y0, y1)).otherwise(y0 + t_b * (y1 - y0))
-            lo = _clamp(F.floor(F.least(ya, yb)))
-            hi = _clamp(F.floor(F.greatest(ya, yb)))
-            return F.transform(
-                F.sequence(lo, hi),
-                lambda yy: cell_from_xy_expr(c, yy, res),
-            )
-
-        return F.flatten(F.transform(F.sequence(cs, ce), _col_cells))
-
-    g = F.col(geom)
-    seg_cells = F.zip_with(
-        F.slice(g, 1, F.size(g) - 1),
-        F.slice(g, 2, F.size(g) - 1),
-        _segment_cells,
+    ya, yb = _y_at(xa, "least"), _y_at(xb, "greatest")
+    lo = _clamp(f"floor(least({ya}, {yb}))")
+    hi = _clamp(f"floor(greatest({ya}, {yb}))")
+    col_cells = f"transform(sequence({lo}, {hi}), __yy -> {cell_from_xy_expr('__c', '__yy', res)})"
+    segment_cells = f"flatten(transform(sequence({cs}, {ce}), __c -> {col_cells}))"
+    g = geom
+    seg_cells = (
+        f"zip_with(slice({g}, 1, size({g}) - 1), slice({g}, 2, size({g}) - 1), "
+        f"(__p, __q) -> {segment_cells})"
     )
     # single-vertex "lines" degrade to their point cell
-    point_cell = F.array(
-        cell_from_xy_expr(
-            _clamp(F.floor(_gx(F.element_at(g, 1)))),
-            _clamp(F.floor(_gy(F.element_at(g, 1)))),
-            res,
-        )
+    first = f"element_at({g}, 1)"
+    point_cell = cell_from_xy_expr(
+        _clamp(f"floor({_gx(first)})"), _clamp(f"floor({_gy(first)})"), res
     )
-    all_cells = F.when(F.size(g) >= 2, F.array_distinct(F.flatten(seg_cells))).otherwise(
-        point_cell
+    all_cells = (
+        f"CASE WHEN size({g}) >= 2 THEN array_distinct(flatten({seg_cells})) "
+        f"ELSE array({point_cell}) END"
     )
-    return lines.select(
-        F.col(line_id), F.explode(all_cells).alias("cell")
-    )
+    return lines.selectExpr(line_id, f"explode({all_cells}) AS cell")
 
 
 def _compact_ancestors(
@@ -518,102 +480,6 @@ def uncompact_cells(
     )
 
 
-def _hof_ray_parity(lat_c, lng_c, edges_col):
-    """Even-odd parity of one point vs an edge list via ``aggregate`` —
-    the lazily-evaluated fallback for shapes beyond the unroll budget."""
-    total = F.aggregate(
-        edges_col,
-        F.lit(0),
-        lambda acc, ed: acc
-        + _edge_crossing_term(lat_c, lng_c, ed["y1"], ed["x1"], ed["y2"], ed["x2"]),
-    )
-    return F.pmod(total, F.lit(2)) == 1
-
-
-def _orient_expr(e, px, py):
-    """Sign term of the cross product (e2−e1)×(p−e1) — the numpy kernel's
-    ``_orient_np`` float expression exactly."""
-    return (e["x2"] - e["x1"]) * (py - e["y1"]) - (e["y2"] - e["y1"]) * (
-        px - e["x1"]
-    )
-
-
-def _proper_cross_expr(e1, e2):
-    o1 = _orient_expr(e1, e2["x1"], e2["y1"])
-    o2 = _orient_expr(e1, e2["x2"], e2["y2"])
-    o3 = _orient_expr(e2, e1["x1"], e1["y1"])
-    o4 = _orient_expr(e2, e1["x2"], e1["y2"])
-    return ((o1 * o2) < 0) & ((o3 * o4) < 0)
-
-
-def _pair_intersects_expr(
-    avlat, avlng, a_edges, bvlat, bvlng, b_edges, max_unrolled: int = 4
-):
-    """PURE-COLUMN polygon-overlap test: any vertex of one side strictly
-    inside the other (ring-summed even-odd, all rings' vertices) OR any
-    proper edge-pair crossing — the float-exact expression twin of
-    :func:`functions.geo.polygons_intersect_np` (whose bbox/edge
-    prefilters are performance-only and semantics-preserving, so the
-    unprefiltered test is equivalent).  Unrolled over ``element_at``
-    accesses while both edge lists fit ``max_unrolled`` (codegen), with a
-    higher-order-function fallback branch for bigger shapes (evaluated
-    lazily).  Multi-ring sides are handled uniformly: the edge lists are
-    per-ring closed and the vertex arrays span all rings."""
-
-    def _any_inside_unrolled(vlat, vlng, edges):
-        szv = F.size(vlat)
-        pred = F.lit(False)
-        for k in range(max_unrolled):
-            plat = F.element_at(vlat, k + 1)
-            plng = F.element_at(vlng, k + 1)
-            sz = F.size(edges)
-            tot = F.lit(0)
-            for j in range(max_unrolled):
-                ed = F.element_at(edges, j + 1)
-                tot = tot + F.when(
-                    F.lit(j) < sz,
-                    _edge_crossing_term(
-                        plat, plng, ed["y1"], ed["x1"], ed["y2"], ed["x2"]
-                    ),
-                ).otherwise(F.lit(0))
-            pred = pred | F.coalesce(
-                (F.lit(k) < szv) & (F.pmod(tot, F.lit(2)) == 1), F.lit(False)
-            )
-        return pred
-
-    def _any_cross_unrolled(ea, eb):
-        sza, szb = F.size(ea), F.size(eb)
-        pred = F.lit(False)
-        for i in range(max_unrolled):
-            e1 = F.element_at(ea, i + 1)
-            for j in range(max_unrolled):
-                e2 = F.element_at(eb, j + 1)
-                pred = pred | F.coalesce(
-                    (F.lit(i) < sza)
-                    & (F.lit(j) < szb)
-                    & _proper_cross_expr(e1, e2),
-                    F.lit(False),
-                )
-        return pred
-
-    small = (F.size(a_edges) <= max_unrolled) & (F.size(b_edges) <= max_unrolled)
-    unrolled = (
-        _any_inside_unrolled(avlat, avlng, b_edges)
-        | _any_inside_unrolled(bvlat, bvlng, a_edges)
-        | _any_cross_unrolled(a_edges, b_edges)
-    )
-    verts_a = F.arrays_zip(avlat.alias("la"), avlng.alias("lo"))
-    verts_b = F.arrays_zip(bvlat.alias("la"), bvlng.alias("lo"))
-    hof = (
-        F.exists(verts_a, lambda v: _hof_ray_parity(v["la"], v["lo"], b_edges))
-        | F.exists(verts_b, lambda v: _hof_ray_parity(v["la"], v["lo"], a_edges))
-        | F.exists(
-            a_edges, lambda e1: F.exists(b_edges, lambda e2: _proper_cross_expr(e1, e2))
-        )
-    )
-    return F.when(small, unrolled).otherwise(hof)
-
-
 def polygon_intersection_join(
     a_polys: DataFrame,
     b_polys: DataFrame,
@@ -623,24 +489,16 @@ def polygon_intersection_join(
     fp: str = "footprint",
     exact: bool = True,
     rings: str = "ring_offsets",
-    refine: str = "python",
 ) -> DataFrame:
     """Polygon ⋈ polygon OVERLAY join: pairs whose footprints intersect —
     the fourth classic spatial join next to containment (PIP), nearest
     (kNN) and range (distance_join).
 
-    ``refine`` selects the exact-refinement engine.  ``"python"`` (the
-    default) runs the Arrow shape-batched numpy kernels; ``"expr"``
-    evaluates the same overlap test — any vertex of one side even-odd
-    inside the other, or any proper edge crossing — as pure column
-    expressions over per-row closed edge lists
-    (:func:`_pair_intersects_expr`), removing the rebalance shuffle and
-    the Python stage.  A/B at sf1.0 (round 6): the pairwise test is
-    quadratic in vertices, so unlike the point-in-polygon join the
-    expression form LOSES here (5.2s vs 2.9s — ~50 guarded terms per
-    candidate in the join stage vs one vectorized kernel per shape
-    batch); kept selectable for workloads whose candidate stage is the
-    bottleneck.
+    Exact refinement runs the Arrow shape-batched numpy kernels.  A
+    pure-expression refinement (per-row closed edge lists, ~50 guarded
+    terms per candidate) lost its A/B at sf1.0 (5.2s vs 2.9s): the
+    pairwise test is quadratic in vertices, unlike the point-in-polygon
+    ray cast, so it was removed.
 
     Plan (candidate work JVM-side):
 
@@ -692,49 +550,26 @@ def polygon_intersection_join(
     )
     a_src = spread_scan(a_polys.select(*a_cols))
     b_src = spread_scan(b_polys.select(*b_cols))
-    if exact and refine == "expr":
-        # vertex arrays + per-ring closed edge lists once per polygon ROW
-        # (pre-explode); the raw footprints are then prunable from the join
-        a_src = a_src.withColumns({
-            "__avlat": F.transform("__a_fp", lambda p: p["lat"]),
-            "__avlng": F.transform("__a_fp", lambda p: p["lng"]),
-            "__a_edges": _closed_edges_expr(
-                F.col("__a_fp"), F.col("__a_rings") if has_ar else None
-            ),
-        })
-        b_src = b_src.withColumns({
-            "__bvlat": F.transform("__b_fp", lambda p: p["lat"]),
-            "__bvlng": F.transform("__b_fp", lambda p: p["lng"]),
-            "__b_edges": _closed_edges_expr(
-                F.col("__b_fp"), F.col("__b_rings") if has_br else None
-            ),
-        })
-    a_extra = ["__avlat", "__avlng", "__a_edges"] if "__a_edges" in a_src.columns else []
-    b_extra = ["__bvlat", "__bvlng", "__b_edges"] if "__b_edges" in b_src.columns else []
+    a_rx, a_ry = xy_expr("a_lat_min", "a_lng_min", res)
     ca = covering_cells(
         a_src,
         res, "__a_fp", keep_bbox=True, keep_xy=True,
-    ).select(
+    ).selectExpr(
         a_id, "__a_fp", "cell", "cx", "cy",
         *(["__a_rings"] if has_ar else []),
-        *a_extra,
-        F.col("lat_min").alias("a_lat_min"), F.col("lat_max").alias("a_lat_max"),
-        F.col("lng_min").alias("a_lng_min"), F.col("lng_max").alias("a_lng_max"),
-    )
-    a_rx, a_ry = xy_expr(F.col("a_lat_min"), F.col("a_lng_min"), res)
-    ca = ca.withColumn("__a_rx", a_rx).withColumn("__a_ry", a_ry)
+        "lat_min AS a_lat_min", "lat_max AS a_lat_max",
+        "lng_min AS a_lng_min", "lng_max AS a_lng_max",
+    ).withColumns({"__a_rx": F.expr(a_rx), "__a_ry": F.expr(a_ry)})
+    b_rx, b_ry = xy_expr("b_lat_min", "b_lng_min", res)
     cb = covering_cells(
         b_src,
         res, "__b_fp", keep_bbox=True,
-    ).select(
+    ).selectExpr(
         b_id, "__b_fp", "cell",
         *(["__b_rings"] if has_br else []),
-        *b_extra,
-        F.col("lat_min").alias("b_lat_min"), F.col("lat_max").alias("b_lat_max"),
-        F.col("lng_min").alias("b_lng_min"), F.col("lng_max").alias("b_lng_max"),
-    )
-    b_rx, b_ry = xy_expr(F.col("b_lat_min"), F.col("b_lng_min"), res)
-    cb = cb.withColumn("__b_rx", b_rx).withColumn("__b_ry", b_ry)
+        "lat_min AS b_lat_min", "lat_max AS b_lat_max",
+        "lng_min AS b_lng_min", "lng_max AS b_lng_max",
+    ).withColumns({"__b_rx": F.expr(b_rx), "__b_ry": F.expr(b_ry)})
     # responsibility cell of the pair = cell of (max(lat_mins),
     # max(lng_mins)); x is monotone in lng and y anti-monotone in lat, so
     # its grid coords are (greatest of the x0s, least of the y-at-lat-min
@@ -743,38 +578,22 @@ def polygon_intersection_join(
     cand = (
         ca.join(cb, "cell")
         .filter(
-            (F.col("a_lat_min") <= F.col("b_lat_max"))
-            & (F.col("b_lat_min") <= F.col("a_lat_max"))
-            & (F.col("a_lng_min") <= F.col("b_lng_max"))
-            & (F.col("b_lng_min") <= F.col("a_lng_max"))
+            "a_lat_min <= b_lat_max AND b_lat_min <= a_lat_max"
+            " AND a_lng_min <= b_lng_max AND b_lng_min <= a_lng_max"
         )
-        .filter(
-            (F.col("cx") == F.greatest("__a_rx", "__b_rx"))
-            & (F.col("cy") == F.least("__a_ry", "__b_ry"))
-        )
+        .filter("cx = greatest(__a_rx, __b_rx) AND cy = least(__a_ry, __b_ry)")
     )
     if not exact:
         return cand.select(a_id, b_id)
-    if refine == "expr":
-        return cand.filter(
-            _pair_intersects_expr(
-                F.col("__avlat"), F.col("__avlng"), F.col("__a_edges"),
-                F.col("__bvlat"), F.col("__bvlng"), F.col("__b_edges"),
-            )
-        ).select(a_id, b_id)
-    sel_cols = [
-        F.col(a_id),
-        F.col(b_id),
-        F.transform("__a_fp", lambda p: p["lat"]).alias("__alat"),
-        F.transform("__a_fp", lambda p: p["lng"]).alias("__alng"),
-        F.transform("__b_fp", lambda p: p["lat"]).alias("__blat"),
-        F.transform("__b_fp", lambda p: p["lng"]).alias("__blng"),
-    ]
-    if has_ar:
-        sel_cols.append(F.col("__a_rings"))
-    if has_br:
-        sel_cols.append(F.col("__b_rings"))
-    sel = cand.select(*sel_cols)
+    sel = cand.selectExpr(
+        a_id, b_id,
+        "transform(__a_fp, __p -> __p.lat) AS __alat",
+        "transform(__a_fp, __p -> __p.lng) AS __alng",
+        "transform(__b_fp, __p -> __p.lat) AS __blat",
+        "transform(__b_fp, __p -> __p.lng) AS __blng",
+        *(["__a_rings"] if has_ar else []),
+        *(["__b_rings"] if has_br else []),
+    )
     # refinement input inherits the cell join's skew (dense cells emit most
     # candidate pairs); the kernel is row-independent, so rebalance on the
     # pair hash before the Python stage — AQE sizes the shuffle output, the
@@ -1084,7 +903,8 @@ BROADCAST_POLY_LIMIT = 200_000
 BROADCAST_VERTEX_LIMIT = 5_000_000  # ≈80 MB of float64 lat/lng pairs
 
 
-def _is_axis_rect_expr(fp_col, lat_min, lat_max, lng_min, lng_max):
+def _is_axis_rect_expr(fp: str, lat_min: str = "lat_min", lat_max: str = "lat_max",
+                       lng_min: str = "lng_min", lng_max: str = "lng_max") -> str:
     """True iff the footprint is exactly its bounding box (axis-aligned
     rectangle traversed in perimeter order, optionally explicitly closed
     with a 5th vertex == the 1st).  For such footprints the even-odd
@@ -1107,98 +927,63 @@ def _is_axis_rect_expr(fp_col, lat_min, lat_max, lng_min, lng_max):
     Catalyst's filter pushdown inlines the whole expression into one
     predicate (regression-tested with codegen factoryMode=CODEGEN_ONLY).
     """
-    lats = F.transform(fp_col, lambda p: p["lat"])
-    lngs = F.transform(fp_col, lambda p: p["lng"])
-    n = F.size(fp_col)
-    pa = [F.try_element_at(lats, F.lit(i)) for i in (1, 2, 3, 4, 5)]
-    po = [F.try_element_at(lngs, F.lit(i)) for i in (1, 2, 3, 4, 5)]
-    closed5 = (n == 5) & (pa[0] == pa[4]) & (po[0] == po[4])
-    size_ok = (n == 4) | closed5
-    on_corner = None
-    for i in range(4):
-        c = ((pa[i] == lat_min) | (pa[i] == lat_max)) & (
-            (po[i] == lng_min) | (po[i] == lng_max)
-        )
-        on_corner = c if on_corner is None else on_corner & c
-    steps_ok = None
-    for i in range(4):
-        j = (i + 1) % 4
-        one_coord = (
-            (pa[i] == pa[j]).cast("int") + (po[i] == po[j]).cast("int")
-        ) == 1
-        steps_ok = one_coord if steps_ok is None else steps_ok & one_coord
-    distinct_ok = None
-    for i in range(4):
-        for j in range(i + 1, 4):
-            ne = (pa[i] != pa[j]) | (po[i] != po[j])
-            distinct_ok = ne if distinct_ok is None else distinct_ok & ne
-    return F.coalesce(
-        size_ok
-        & on_corner
-        & steps_ok
-        & distinct_ok
-        & (lat_min < lat_max)
-        & (lng_min < lng_max),
-        F.lit(False),
+    lats = f"transform({fp}, __p -> __p.lat)"
+    lngs = f"transform({fp}, __p -> __p.lng)"
+    n = f"size({fp})"
+    pa = [f"try_element_at({lats}, {i})" for i in (1, 2, 3, 4, 5)]
+    po = [f"try_element_at({lngs}, {i})" for i in (1, 2, 3, 4, 5)]
+    closed5 = f"{n} = 5 AND {pa[0]} = {pa[4]} AND {po[0]} = {po[4]}"
+    size_ok = f"{n} = 4 OR ({closed5})"
+    on_corner = " AND ".join(
+        f"(({pa[i]} = {lat_min} OR {pa[i]} = {lat_max})"
+        f" AND ({po[i]} = {lng_min} OR {po[i]} = {lng_max}))"
+        for i in range(4)
+    )
+    steps_ok = " AND ".join(
+        f"CAST({pa[i]} = {pa[(i + 1) % 4]} AS INT)"
+        f" + CAST({po[i]} = {po[(i + 1) % 4]} AS INT) = 1"
+        for i in range(4)
+    )
+    distinct_ok = " AND ".join(
+        f"({pa[i]} != {pa[j]} OR {po[i]} != {po[j]})"
+        for i in range(4) for j in range(i + 1, 4)
+    )
+    return (
+        f"coalesce(({size_ok}) AND ({on_corner}) AND ({steps_ok}) AND ({distinct_ok})"
+        f" AND {lat_min} < {lat_max} AND {lng_min} < {lng_max}, false)"
     )
 
 
-def _closed_edges_expr(fp_col, rings_col):
+def _closed_edges_expr(fp: str, rings: str | None) -> str:
     """Per-ring CLOSED edge list of a footprint as
     ``array<struct<y1,x1,y2,x2>>`` — each ring closes onto its own first
-    vertex, no cross-ring edges (column twin of
+    vertex, no cross-ring edges (SQL twin of
     :func:`functions.geo._ring_edges_np`).  Evaluated once per POLYGON row
     (before the covering-cell explode), so the per-candidate refinement
     can be plain codegen arithmetic over ``element_at`` accesses."""
-    n = F.size(fp_col)
-    if rings_col is None:
-        starts = F.array(F.lit(0))
-    else:
-        starts = F.when(
-            rings_col.isNull() | (F.size(rings_col) == 0), F.array(F.lit(0))
-        ).otherwise(rings_col)
-    ends = F.concat(
-        F.slice(starts, 2, F.greatest(F.size(starts) - 1, F.lit(0))),
-        F.array(n),
-    )
-    bounds = F.filter(
-        F.arrays_zip(starts.alias("s"), ends.alias("e")),
-        lambda b: b["e"] > b["s"],
-    )
-
-    def _edge(i, s, e):
-        j = F.when(i + 1 == e, s).otherwise(i + 1)
-        p = F.element_at(fp_col, (i + 1).cast("int"))
-        q = F.element_at(fp_col, (j + 1).cast("int"))
-        return F.struct(
-            p["lat"].alias("y1"), p["lng"].alias("x1"),
-            q["lat"].alias("y2"), q["lng"].alias("x2"),
-        )
-
-    return F.flatten(
-        F.transform(
-            bounds,
-            lambda b: F.transform(
-                F.sequence(b["s"], b["e"] - 1), lambda i: _edge(i, b["s"], b["e"])
-            ),
-        )
+    bounds = f"filter({ring_bounds_expr(fp, rings)}, __b -> __b.e > __b.s)"
+    nxt = "CASE WHEN __i + 1 = __b.e THEN __b.s ELSE __i + 1 END"
+    p = f"element_at({fp}, CAST(__i + 1 AS INT))"
+    q = f"element_at({fp}, CAST({nxt} + 1 AS INT))"
+    edge = f"struct({p}.lat AS y1, {p}.lng AS x1, {q}.lat AS y2, {q}.lng AS x2)"
+    return (
+        f"flatten(transform({bounds}, __b -> "
+        f"transform(sequence(__b.s, __b.e - 1), __i -> {edge})))"
     )
 
 
-def _edge_crossing_term(lat_col, lng_col, y1, x1, y2, x2):
+def _edge_crossing_term(lat: str, lng: str, y1: str, x1: str, y2: str, x2: str) -> str:
     """One edge's contribution to the even-odd crossing count — the numpy
     kernel's EXACT float expression (``points_in_polygon_np``): crossing
     guard first, strict-``<`` intercept second, both lazily (the division
     is unreachable when the guard is false, and the guard implies
     ``y1 != y2``)."""
-    crosses = (y1 > lat_col) != (y2 > lat_col)
-    xint = x1 + (lat_col - y1) / (y2 - y1) * (x2 - x1)
-    return F.when(
-        crosses, F.when(lng_col < xint, F.lit(1)).otherwise(F.lit(0))
-    ).otherwise(F.lit(0))
+    crosses = f"(({y1}) > ({lat})) != (({y2}) > ({lat}))"
+    xint = f"({x1}) + (({lat}) - ({y1})) / (({y2}) - ({y1})) * (({x2}) - ({x1}))"
+    return f"CASE WHEN {crosses} THEN CASE WHEN ({lng}) < {xint} THEN 1 ELSE 0 END ELSE 0 END"
 
 
-def _unrolled_ray_cast(lat_col, lng_col, edges_col, max_unrolled: int = 16):
+def _unrolled_ray_cast(lat: str, lng: str, edges: str, max_unrolled: int = 16) -> str:
     """Even-odd ray cast over a precomputed closed edge list, UNROLLED so
     the per-candidate work is whole-stage-codegen arithmetic (higher-order
     functions are CodegenFallback — interpreted per row — which measured
@@ -1206,28 +991,21 @@ def _unrolled_ray_cast(lat_col, lng_col, edges_col, max_unrolled: int = 16):
     unrolled form beats both).  Edges beyond ``max_unrolled`` fall through
     to one lazily-evaluated ``aggregate`` tail, so any vertex count stays
     correct while typical footprints never leave codegen."""
-    sz = F.size(edges_col)
-    total = F.lit(0)
-    for k in range(max_unrolled):
-        ed = F.element_at(edges_col, k + 1)
-        total = total + F.when(
-            F.lit(k) < sz,
-            _edge_crossing_term(
-                lat_col, lng_col, ed["y1"], ed["x1"], ed["y2"], ed["x2"]
-            ),
-        ).otherwise(F.lit(0))
-    tail = F.aggregate(
-        F.slice(
-            edges_col, max_unrolled + 1, F.greatest(sz - max_unrolled, F.lit(0))
-        ),
-        F.lit(0),
-        lambda acc, ed: acc
-        + _edge_crossing_term(
-            lat_col, lng_col, ed["y1"], ed["x1"], ed["y2"], ed["x2"]
-        ),
+
+    def term(ed: str) -> str:
+        return _edge_crossing_term(lat, lng, f"{ed}.y1", f"{ed}.x1", f"{ed}.y2", f"{ed}.x2")
+
+    sz = f"size({edges})"
+    unrolled = " + ".join(
+        f"CASE WHEN {k} < {sz} THEN {term(f'element_at({edges}, {k + 1})')} ELSE 0 END"
+        for k in range(max_unrolled)
     )
-    total = total + F.when(sz > max_unrolled, tail).otherwise(F.lit(0))
-    return F.pmod(total, F.lit(2)) == 1
+    tail = (
+        f"aggregate(slice({edges}, {max_unrolled + 1}, greatest({sz} - {max_unrolled}, 0)),"
+        f" 0, (__acc, __ed) -> __acc + {term('__ed')})"
+    )
+    total = f"0 + {unrolled} + CASE WHEN {sz} > {max_unrolled} THEN {tail} ELSE 0 END"
+    return f"pmod({total}, 2) = 1"
 
 
 def point_in_polygon_join(
@@ -1294,11 +1072,9 @@ def point_in_polygon_join(
 
     sc = points.sparkSession.sparkContext
     has_rings = rings in polygons.columns
-    single_ring = (
-        (F.col(rings).isNull() | (F.size(F.col(rings)) <= 1))
-        if has_rings
-        else F.lit(True)
-    )
+    single_ring = f"({rings} IS NULL OR size({rings}) <= 1)" if has_rings else "true"
+    # a multi-ring footprint is never a plain rectangle
+    rect = f"({_is_axis_rect_expr(fp)}) AND {single_ring}"
     poly_cols = [poly_id, fp] + ([rings] if has_rings else [])
     if refine is None:
         # an explicit broadcast_polys choice selects the kernel machinery it
@@ -1318,8 +1094,7 @@ def point_in_polygon_join(
         # closed edge list once per polygon ROW (pre-explode); the raw
         # footprint is then prunable from the covering explode + join
         poly_src = poly_src.withColumn(
-            "__edges",
-            _closed_edges_expr(F.col(fp), F.col(rings) if has_rings else None),
+            "__edges", F.expr(_closed_edges_expr(fp, rings if has_rings else None))
         )
     # per-ring coverings when a rings column exists: separated multipolygon
     # shells cover only their own cells (hole-in-outer rows are unchanged —
@@ -1329,31 +1104,20 @@ def point_in_polygon_join(
         rings=rings if has_rings else None,
     )
     # rect detection evaluated on the (small) polygon-cell side, not per
-    # candidate pair; a multi-ring footprint is never a plain rectangle
-    polys = polys.withColumn(
-        "__rect",
-        _is_axis_rect_expr(
-            F.col(fp), F.col("lat_min"), F.col("lat_max"),
-            F.col("lng_min"), F.col("lng_max"),
-        )
-        & single_ring,
-    )
+    # candidate pair
+    polys = polys.withColumn("__rect", F.expr(rect))
 
     cand = pts.join(polys, "cell").filter(
-        (F.col(lat) >= F.col("lat_min"))
-        & (F.col(lat) < F.col("lat_max"))
-        & (F.col(lng) >= F.col("lng_min"))
-        & (F.col(lng) < F.col("lng_max"))
+        f"{lat} >= lat_min AND {lat} < lat_max AND {lng} >= lng_min AND {lng} < lng_max"
     )
     if not exact:
         return cand.select(point_id, poly_id, *carry)
     if refine == "expr":
-        inside = F.when(F.col("__rect"), F.lit(True)).otherwise(
-            _unrolled_ray_cast(F.col(lat), F.col(lng), F.col("__edges"))
-        )
-        return cand.filter(inside).select(point_id, poly_id, *carry)
-    rect_hits = cand.filter(F.col("__rect")).select(point_id, poly_id, *carry)
-    rest = cand.filter(~F.col("__rect"))
+        return cand.filter(
+            f"CASE WHEN __rect THEN true ELSE {_unrolled_ray_cast(lat, lng, '__edges')} END"
+        ).select(point_id, poly_id, *carry)
+    rect_hits = cand.filter("__rect").select(point_id, poly_id, *carry)
+    rest = cand.filter("NOT __rect")
 
     n_nonrect = None
     probed_map = None
@@ -1364,20 +1128,15 @@ def point_in_polygon_join(
         # runs a polygon collect() or a mapInPandas stage — and (c) ships
         # the NON-rect vertices for the broadcast map in the same pass, so
         # no second collect job ever runs.
-        pb = footprint_bbox(polygons.select(*poly_cols), fp)
-        rect = _is_axis_rect_expr(
-            F.col(fp), F.col("lat_min"), F.col("lat_max"),
-            F.col("lng_min"), F.col("lng_max"),
-        ) & single_ring
         probe = (
-            pb.select(
-                F.col(poly_id),
-                F.size(F.col(fp)).alias("nv"),
-                rect.alias("rect"),
-                F.when(~rect, F.col(fp)).alias("__fp"),
-                (F.when(~rect, F.col(rings)) if has_rings else F.lit(None)).alias(
-                    "__rings"
-                ),
+            footprint_bbox(polygons.select(*poly_cols), fp)
+            .selectExpr(
+                poly_id,
+                f"size({fp}) AS nv",
+                f"{rect} AS rect",
+                f"CASE WHEN NOT ({rect}) THEN {fp} END AS __fp",
+                (f"CASE WHEN NOT ({rect}) THEN {rings} END" if has_rings else "NULL")
+                + " AS __rings",
             )
             .limit(BROADCAST_POLY_LIMIT + 1)
             .collect()
@@ -1401,21 +1160,15 @@ def point_in_polygon_join(
     if n_nonrect == 0:
         return rect_hits
 
-    rest_cols = [
-        F.col(point_id),
-        F.col(poly_id),
-        *[F.col(c) for c in carry],
-        F.col(lat).alias("__plat"),
-        F.col(lng).alias("__plng"),
-    ]
+    rest_cols = [point_id, poly_id, *carry, f"{lat} AS __plat", f"{lng} AS __plng"]
     if not broadcast_polys:
         rest_cols += [
-            F.transform(F.col(fp), lambda p: p["lat"]).alias("__fp_lat"),
-            F.transform(F.col(fp), lambda p: p["lng"]).alias("__fp_lng"),
+            f"transform({fp}, __p -> __p.lat) AS __fp_lat",
+            f"transform({fp}, __p -> __p.lng) AS __fp_lng",
         ]
         if has_rings:
-            rest_cols.append(F.col(rings).alias("__fp_rings"))
-    rest = rest.select(*rest_cols)
+            rest_cols.append(f"{rings} AS __fp_rings")
+    rest = rest.selectExpr(*rest_cols)
     # refinement input inherits the cell join's skew (dense city-core cells);
     # refinement is row-independent, so rebalance before the python stage.
     # Partitioning by (poly_id, salt) keeps each Arrow batch dense in few
@@ -1439,15 +1192,8 @@ def point_in_polygon_join(
         if probed_map is not None:
             poly_map = probed_map
         else:
-            pb = footprint_bbox(polygons.select(*poly_cols), fp)
-            nonrect = pb.filter(
-                ~(
-                    _is_axis_rect_expr(
-                        F.col(fp), F.col("lat_min"), F.col("lat_max"),
-                        F.col("lng_min"), F.col("lng_max"),
-                    )
-                    & single_ring
-                )
+            nonrect = footprint_bbox(polygons.select(*poly_cols), fp).filter(
+                f"NOT ({rect})"
             )
             poly_map = {}
             for r in nonrect.select(*poly_cols).collect():

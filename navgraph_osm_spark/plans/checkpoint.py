@@ -5,7 +5,9 @@ files and unlinks them as consumed (reference main.cpp:95-127, 291, 336) —
 its filesystem IS its shuffle and its (non-resumable) checkpoint.  Here each
 registered stage writes a managed table (Iceberg when available, else
 Parquet) plus a ``_lineage.json`` sidecar: row count, content fingerprint,
-per-partition-column counts, input fingerprints, wall time.  ``run()``
+per-partition-column counts, input fingerprints, wall time.  The counts
+are read from the written files' metadata (parquet footers per hive
+partition directory, or the Iceberg snapshot summary) — no count job.  ``run()``
 skips stages whose output already exists and validates — that is the
 north_rule's checkpoint-resume.
 
@@ -128,6 +130,34 @@ def partition_dir_fingerprints(path: str, col: str) -> dict[str, str]:
                     entries.append((os.path.relpath(p, full), os.path.getsize(p)))
         out[value] = _md5(json.dumps(sorted(entries)))
     return out
+
+
+def partition_row_counts(path: str, cols: list[str]) -> dict[tuple[str, ...], int]:
+    """Row count per partition-value tuple of a hive-partitioned parquet
+    directory, summed from parquet footers — metadata-only, no Spark job.
+
+    Walks the ``<col>=<value>`` directories in ``cols`` order (the layout
+    ``partitionBy(*cols)`` writes).  Values are UNESCAPED (see
+    :func:`partition_dir_fingerprints`); the null partition
+    (``__HIVE_DEFAULT_PARTITION__``) reads as ``"None"`` — what ``str()`` of
+    a null partition value gives."""
+    import pyarrow.parquet as pq
+
+    counts: dict[tuple[str, ...], int] = {}
+    for root, _dirs, files in os.walk(path):
+        rel = os.path.relpath(root, path).split(os.sep)
+        dirs = dict(d.split("=", 1) for d in rel if "=" in d)
+        if any(c not in dirs for c in cols):
+            continue
+        key = tuple(
+            "None" if dirs[c] == "__HIVE_DEFAULT_PARTITION__" else _unescape_hive(dirs[c])
+            for c in cols
+        )
+        for f in files:
+            if f.endswith(".parquet"):
+                n = pq.read_metadata(os.path.join(root, f)).num_rows
+                counts[key] = counts.get(key, 0) + n
+    return counts
 
 
 def _unescape_hive(name: str) -> str:
@@ -336,7 +366,11 @@ class StageRunner:
             self.writer.write(df, st.name, partition_by=st.partition_by)
             out = self.writer.read(st.name)
             ran.append(st.name)
-            n_rows = out.count()
+            # lineage counts come from file metadata (parquet footers /
+            # Iceberg snapshot summary); a count job only when unreadable
+            n_rows = table_metadata_rows(self.writer, st.name)
+            if n_rows is None:
+                n_rows = out.count()
             fprints[st.name] = table_fingerprint(self.writer, st.name)
             lineage = {
                 "stage": st.name,
@@ -351,16 +385,22 @@ class StageRunner:
             if inc_cur is not None:
                 lineage["input_partitions"] = inc_cur
             if st.partition_by:
-                per_part = (
-                    out.groupBy(*st.partition_by)
-                    .agg(F.count("*").alias("n"))
-                    .orderBy(*st.partition_by)
-                    .limit(10000)
-                    .collect()
-                )
+                if self.writer.use_iceberg:  # no hive directories to read
+                    per_part = {
+                        tuple(str(r[c]) for c in st.partition_by): r["n"]
+                        for r in out.groupBy(*st.partition_by)
+                        .agg(F.count("*").alias("n"))
+                        .orderBy(*st.partition_by)
+                        .limit(10000)
+                        .collect()
+                    }
+                else:
+                    per_part = partition_row_counts(
+                        self.writer.path(st.name), st.partition_by
+                    )
                 lineage["partitions"] = [
-                    {**{c: str(r[c]) for c in st.partition_by}, "rows": r["n"]}
-                    for r in per_part
+                    {**dict(zip(st.partition_by, key)), "rows": n}
+                    for key, n in sorted(per_part.items())[:10000]
                 ]
             with open(self._lineage_path(st.name), "w") as f:
                 json.dump(lineage, f, indent=1)

@@ -853,7 +853,7 @@ _RES_XY = 6  # 64×64 xy grid for SQL-checkable cell ids
 def sp_cell_histogram(spark, sf_dir):
     pts = points_df(spark, sf_dir)
     return pts.groupBy(
-        cell_xy_expr(F.col("lat"), F.col("lng"), _RES_XY).alias("cell")
+        F.expr(cell_xy_expr("lat", "lng", _RES_XY)).alias("cell")
     ).agg(F.count("*").alias("n_rows"))
 
 
@@ -996,14 +996,12 @@ def sp_pip_join(spark, sf_dir):
 )
 def sp_tile_assignment(spark, sf_dir):
     b = boxes_df(spark, sf_dir)
-    x0, _yA = xy_expr(F.col("lat1"), F.col("lng0"), _RES_XY)
-    x1, _yB = xy_expr(F.col("lat0"), F.col("lng1"), _RES_XY)
-    _xA, y0 = xy_expr(F.col("lat1"), F.col("lng0"), _RES_XY)
-    _xB, y1 = xy_expr(F.col("lat0"), F.col("lng1"), _RES_XY)
+    x0, y0 = xy_expr("lat1", "lng0", _RES_XY)
+    x1, y1 = xy_expr("lat0", "lng1", _RES_XY)
     return (
-        b.withColumn("x", F.explode(F.sequence(x0, x1)))
-        .withColumn("y", F.explode(F.sequence(y0, y1)))
-        .select("box_id", (F.col("x") * (1 << _RES_XY) + F.col("y")).alias("cell"))
+        b.withColumn("x", F.expr(f"explode(sequence({x0}, {x1}))"))
+        .withColumn("y", F.expr(f"explode(sequence({y0}, {y1}))"))
+        .selectExpr("box_id", f"x * {1 << _RES_XY} + y AS cell")
     )
 
 
@@ -1022,8 +1020,8 @@ def sp_cell_stats_grouped(spark, sf_dir):
     co-grouped rows, oracled against the equivalent SQL aggregation."""
     from navgraph_osm_spark.operators.spatial_join import per_cell_stats_grouped
 
-    pts = points_df(spark, sf_dir).select(
-        cell_xy_expr(F.col("lat"), F.col("lng"), _RES_XY).alias("cell"), "lat", "lng"
+    pts = points_df(spark, sf_dir).selectExpr(
+        f"{cell_xy_expr('lat', 'lng', _RES_XY)} AS cell", "lat", "lng"
     )
     out = per_cell_stats_grouped(pts)
     return out.select(
@@ -1359,8 +1357,8 @@ def a3_running_offsets(spark, sf_dir):
     """A3 per-cell monotonic offsets (reference main.cpp:314-326)."""
     from navgraph_osm_spark.operators.decode_ops import running_offsets
 
-    pts = points_df(spark, sf_dir).select(
-        "point_id", cell_xy_expr(F.col("lat"), F.col("lng"), _RES_XY).alias("cell")
+    pts = points_df(spark, sf_dir).selectExpr(
+        "point_id", f"{cell_xy_expr('lat', 'lng', _RES_XY)} AS cell"
     )
     return running_offsets(pts, "cell", "point_id").select(
         "point_id", "cell", F.col("offset").cast("int").alias("offset")

@@ -114,30 +114,17 @@ def streaming_knn_tracker(
     from navgraph_osm_spark.cells import cell_from_xy_expr, grid_disk_expr, xy_expr
     from navgraph_osm_spark.functions.geo import haversine_expr
 
-    qx, qy = xy_expr(F.col("lat"), F.col("lng"), res)
-    qdisk = (
-        queries.select(
-            F.col(query_id),
-            F.col("lat").alias("q_lat"),
-            F.col("lng").alias("q_lng"),
-            F.explode(grid_disk_expr(qx, qy, res, ring)).alias("nb"),
-        )
-        .withColumn("cell", cell_from_xy_expr(F.col("nb.x"), F.col("nb.y"), res))
-        .drop("nb")
+    x, y = xy_expr("lat", "lng", res)
+    qdisk = queries.selectExpr(
+        query_id, "lat AS q_lat", "lng AS q_lng",
+        f"explode({grid_disk_expr(x, y, res, ring)}) AS nb",
+    ).selectExpr(query_id, "q_lat", "q_lng", f"{cell_from_xy_expr('nb.x', 'nb.y', res)} AS cell")
+    pts = points_stream.selectExpr(
+        point_id, "lat AS p_lat", "lng AS p_lng", f"{cell_from_xy_expr(x, y, res)} AS cell"
     )
-    px, py = xy_expr(F.col("lat"), F.col("lng"), res)
-    pts = points_stream.select(
-        F.col(point_id),
-        F.col("lat").alias("p_lat"),
-        F.col("lng").alias("p_lng"),
-        cell_from_xy_expr(px, py, res).alias("cell"),
-    )
-    cand = pts.join(qdisk, "cell").select(
-        query_id,
-        point_id,
-        haversine_expr(
-            F.col("q_lat"), F.col("q_lng"), F.col("p_lat"), F.col("p_lng")
-        ).alias("dist_km"),
+    cand = pts.join(qdisk, "cell").selectExpr(
+        query_id, point_id,
+        f"{haversine_expr('q_lat', 'q_lng', 'p_lat', 'p_lng')} AS dist_km",
     )
 
     def _update(key, pdfs, state: GroupState):

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Ad-hoc oracle sweep: run named (or all) oracled queries at a given SF and
 compare against the DuckDB oracle the same way the driver does (row count +
-column set + order-insensitive values).  Usage:
+column set + order-insensitive values).  Parallelism is ``SPARK_GRAFT_CPUS``
+(default: the machine's core count).  Usage:
 
     python scripts/oracle_sweep.py [--sf-dir DIR] [query ...]
 """
@@ -24,13 +25,19 @@ from navgraph_osm_spark.sources.tables import DRIVER_TABLES  # noqa: E402
 
 
 def _canon(df):
+    """Columns in name order, rows sorted on the non-float columns first:
+    a float that rounds differently on the two sides then cannot reorder
+    rows and misalign the 1e-6 value check (floats only break ties)."""
     df = df[sorted(df.columns)].copy()
+    floats = []
     for c in df.columns:
         if df[c].dtype.kind == "f":
             df[c] = df[c].round(9)
+            floats.append(c)
         elif df[c].dtype == object:
             df[c] = df[c].astype(str)
-    return df.sort_values(list(df.columns)).reset_index(drop=True)
+    keys = [c for c in df.columns if c not in floats] + floats
+    return df.sort_values(keys).reset_index(drop=True)
 
 
 def main() -> None:
@@ -47,7 +54,8 @@ def main() -> None:
 
     oracles = entry_mod.oracle_sql()
     names = args.names or sorted(oracles)
-    spark = get_spark("oracle_sweep", parallelism=32)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    spark = get_spark("oracle_sweep", parallelism=cpus)
     qs = entry_mod.queries()
     failed = []
     for name in names:

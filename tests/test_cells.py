@@ -54,7 +54,7 @@ def test_spark_expr_matches_numpy(spark):
     df = spark.createDataFrame(pdf)
     for res in (2, 9, 16, 25):
         got = (
-            df.select(cells.cell_expr(F.col("lat"), F.col("lng"), res).alias("c"))
+            df.select(F.expr(cells.cell_expr("lat", "lng", res)).alias("c"))
             .toPandas()["c"]
             .to_numpy()
         )
@@ -62,7 +62,7 @@ def test_spark_expr_matches_numpy(spark):
         assert (got == want).all()
     # xy variant parity with its own SQL text
     got_xy = (
-        df.select(cells.cell_xy_expr(F.col("lat"), F.col("lng"), 12).alias("c"))
+        df.select(F.expr(cells.cell_xy_expr("lat", "lng", 12)).alias("c"))
         .toPandas()["c"]
         .to_numpy()
     )
@@ -79,13 +79,13 @@ def test_grid_disk_expr_matches_numpy(spark):
     pdf = pd.DataFrame({"lat": [10.0, 89.999, 0.0], "lng": [20.0, 0.0, -179.999]})
     df = spark.createDataFrame(pdf)
     res, k = 10, 1
-    x, y = cells.xy_expr(F.col("lat"), F.col("lng"), res)
+    x, y = cells.xy_expr("lat", "lng", res)
     out = (
-        df.withColumn("nb", F.explode(cells.grid_disk_expr(x, y, res, k)))
+        df.withColumn("nb", F.explode(F.expr(cells.grid_disk_expr(x, y, res, k))))
         .select(
             "lat",
             "lng",
-            cells.cell_from_xy_expr(F.col("nb.x"), F.col("nb.y"), res).alias("c"),
+            F.expr(cells.cell_from_xy_expr("nb.x", "nb.y", res)).alias("c"),
         )
         .toPandas()
     )
@@ -114,7 +114,7 @@ def test_cell_morton_sql_parity():
 
 
 def test_cell_bounds_expr_matches_numpy(spark):
-    """Column-expression cell bounds (raster→vector) equal the numpy twin
+    """SQL-text cell bounds (raster→vector) equal the numpy twin
     bit for bit, and every generating point lies inside its cell's box."""
     import numpy as np
     import pandas as pd
@@ -128,7 +128,7 @@ def test_cell_bounds_expr_matches_numpy(spark):
     lng = rng.uniform(-179, 179, 500)
     cell = cells.latlng_to_cell(lat, lng, res)
     df = spark.createDataFrame(pd.DataFrame({"cell": cell, "lat": lat, "lng": lng}))
-    lat_min, lat_max, lng_min, lng_max = cells.cell_bounds_expr(F.col("cell"), res)
+    lat_min, lat_max, lng_min, lng_max = map(F.expr, cells.cell_bounds_expr("cell", res))
     got = df.select(
         "cell", "lat", "lng",
         lat_min.alias("a"), lat_max.alias("b"),

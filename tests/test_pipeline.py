@@ -300,3 +300,29 @@ def test_incremental_resume_deletes_emptied_partition(spark, tmp_path):
     r3 = make_runner()
     r3.run(verify=True)
     assert r3.last_run_report["stages_run"] == []
+
+
+def test_lineage_counts_from_file_metadata_equal_count(spark, tmp_path):
+    """Lineage row counts are read from parquet footers after the write
+    (no count job) and must equal what Spark counts: the total and every
+    partition of a two-column hive layout, including the null partition
+    and a value that hive escapes in its directory name."""
+    from navgraph_osm_spark.plans.checkpoint import StageRunner
+
+    rows = [(i % 3 if i % 7 else None, "a:b" if i % 2 else "c d", i) for i in range(40)]
+    src = spark.createDataFrame(rows, "p1 int, p2 string, v int")
+    runner = StageRunner(spark, str(tmp_path / "wh"))
+    runner.stage("flat", lambda deps: src)
+    runner.stage("parts", lambda deps: src, partition_by=["p1", "p2"])
+    out = runner.run()
+
+    for name in ("flat", "parts"):
+        with open(tmp_path / "wh" / f"{name}._lineage.json") as f:
+            lineage = json.load(f)
+        assert lineage["rows"] == out[name].count() == 40
+    want = {
+        (str(r["p1"]), str(r["p2"])): r["n"]
+        for r in out["parts"].groupBy("p1", "p2").agg(F.count("*").alias("n")).collect()
+    }
+    got = {(p["p1"], p["p2"]): p["rows"] for p in lineage["partitions"]}
+    assert got == want and len(got) == 8

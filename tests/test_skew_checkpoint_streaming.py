@@ -43,7 +43,7 @@ def test_adaptive_cell_split_bounds_density(skewed_points):
 
 
 def test_salted_repartition_spreads(skewed_points):
-    df = skewed_points.withColumn("cell", cells.cell_expr(F.col("lat"), F.col("lng"), 8))
+    df = skewed_points.withColumn("cell", F.expr(cells.cell_expr("lat", "lng", 8)))
     out = salted_repartition(df, "cell", salt_buckets=8, partitions=8)
     assert out.count() == df.count()
     assert out.select("salt").distinct().count() == 8
