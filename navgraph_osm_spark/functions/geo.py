@@ -14,8 +14,9 @@ Spark SQL-text implementations of the reference's scalar geometry library
 - ``find_middle_point_np`` ↔ ``findMiddlePoint`` (geomath.cpp:77-97):
   point at half the *Euclidean* polyline length by linear interpolation.
 - ``points_in_polygon_np`` — vectorized ray-casting point-in-polygon
-  (the exact-refinement kernel for the spatial join; the reference has no
-  polygon ops — this is graft functionality per BASELINE.json).
+  (the PIP join's test oracle and the overlay kernel's containment test;
+  the reference has no polygon ops — this is graft functionality per
+  BASELINE.json).
 """
 
 from __future__ import annotations

@@ -92,13 +92,3 @@ def simhash64(texts: pd.Series, n: int = 3) -> np.ndarray:
                 val |= np.uint64(1) << np.uint64(k)
         out[i] = np.int64(val.astype(np.int64))
     return out
-
-
-def hamming64(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Per-element Hamming distance between two int64 hash arrays."""
-    x = (np.asarray(a, dtype=np.int64) ^ np.asarray(b, dtype=np.int64)).astype(np.uint64)
-    cnt = np.zeros_like(x, dtype=np.int64)
-    for _ in range(64):
-        cnt += (x & np.uint64(1)).astype(np.int64)
-        x >>= np.uint64(1)
-    return cnt

@@ -9,7 +9,7 @@ window cumulative sum and a column expression — both stay in codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -31,13 +31,6 @@ def delta_decode(
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     return df.withColumn(out, F.sum(delta_col).over(w))
-
-
-def fixed_point_to_degrees(
-    coord: Column, offset: int = 0, granularity: int = 100
-) -> Column:
-    """(offset + granularity * coord) / 1e9 (S4)."""
-    return (F.lit(offset) + F.lit(granularity) * coord) / F.lit(1e9)
 
 
 def running_offsets(

@@ -2,19 +2,20 @@
 
 Design (BASELINE.json north_star): candidate generation by **cell equi join**
 — points indexed at resolution ``res``, polygons expanded to their covering
-cell set — then **exact refinement** with vectorized ray-casting inside an
-Arrow-batched ``mapInPandas``.  This reuses the reference's spatial-locality
-pattern (per-pixel partitioning + border replication, reference
-main.cpp:226-238, 621-708): a polygon is "replicated" into every cell it
-covers, exactly like the reference's border edges are written to both
-incident pixels.
+cell set — then **exact refinement**.  The point-in-polygon join refines
+with an unrolled even-odd ray cast in whole-stage codegen; the polygon
+overlay join refines in an Arrow-batched ``mapInPandas``.  This reuses the
+reference's spatial-locality pattern (per-pixel partitioning + border
+replication, reference main.cpp:226-238, 621-708): a polygon is
+"replicated" into every cell it covers, exactly like the reference's
+border edges are written to both incident pixels.
 
 Scale notes: the candidate join is a plain equi join on ``cell`` — AQE
 handles skew splitting; dense city-core cells can additionally be salted /
 adaptively split (operators.skew).  Covering-cell expansion is pure column
 arithmetic (sequence × sequence explode), so Catalyst pushes the whole
-candidate stage into codegen; Python runs only in the final refinement over
-candidate pairs.
+candidate stage into codegen; Python runs only in the overlay join's final
+refinement over candidate pairs.
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from navgraph_osm_spark.cells import cell_expr, cell_from_xy_expr, dbl, xy_expr
-from navgraph_osm_spark.functions.geo import points_in_polygon_np, ring_bounds_expr
+from navgraph_osm_spark.functions.geo import ring_bounds_expr
 
 
 def _q(name: str) -> str:
@@ -596,8 +597,8 @@ def polygon_intersection_join(
     )
     # refinement input inherits the cell join's skew (dense cells emit most
     # candidate pairs); the kernel is row-independent, so rebalance on the
-    # pair hash before the Python stage — AQE sizes the shuffle output, the
-    # same shape as point_in_polygon_join's pre-refinement rebalance
+    # pair hash before the Python stage — AQE sizes the shuffle output, so a
+    # small survivor set doesn't fan out into near-empty Python tasks
     sel = sel.repartition(F.xxhash64(F.col(a_id), F.col(b_id)))
     dtypes = dict(sel.dtypes)
     out_schema = f"{a_id} {dtypes[a_id]}, {b_id} {dtypes[b_id]}"
@@ -802,107 +803,6 @@ def split_antimeridian(
     return polygons.select(*cols).mapInPandas(_kernel, schema=schema)
 
 
-_REFINE_HELP_COLS = ("__plat", "__plng", "__fp_lat", "__fp_lng")
-
-
-def _poly_groups(pid: np.ndarray):
-    """(stable argsort order, group start offsets) for grouping a batch's
-    candidate rows by polygon id with pure numpy — replaces pandas
-    ``groupby(...).groups`` + ``index.get_indexer``, whose per-group
-    overhead dominated the one remaining Python hot path."""
-    order = np.argsort(pid, kind="stable")
-    sorted_pid = pid[order]
-    starts = np.flatnonzero(
-        np.concatenate(([True], sorted_pid[1:] != sorted_pid[:-1]))
-    )
-    return order, starts
-
-
-def _refine_kernel(id_cols: list[str], has_rings: bool = False):
-    """Kernel factory: exact point-in-polygon refinement over candidate pairs.
-
-    Vectorizes over all points sharing a polygon (grouped by the polygon id,
-    ``id_cols[1]``, via one stable argsort) within the Arrow batch; yields
-    only the id columns of surviving pairs.  ``has_rings`` reads the carried
-    ``__fp_rings`` ring offsets (holes / multipolygon shells — crossings
-    summed across rings).
-    """
-    pid_col = id_cols[1]
-
-    def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                yield pdf[id_cols]
-                continue
-            pid = pdf[pid_col].to_numpy()
-            plat = pdf["__plat"].to_numpy()
-            plng = pdf["__plng"].to_numpy()
-            fp_lat_col = pdf["__fp_lat"].to_numpy()
-            fp_lng_col = pdf["__fp_lng"].to_numpy()
-            rings_col = pdf["__fp_rings"].to_numpy() if has_rings else None
-            order, starts = _poly_groups(pid)
-            keep = np.zeros(n, dtype=bool)
-            bounds = np.append(starts, n)
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                idx = order[s:e]
-                first = idx[0]
-                keep[idx] = points_in_polygon_np(
-                    plat[idx], plng[idx],
-                    np.asarray(fp_lat_col[first], dtype=np.float64),
-                    np.asarray(fp_lng_col[first], dtype=np.float64),
-                    ring_starts=rings_col[first] if has_rings else None,
-                )
-            yield pdf[keep][id_cols]
-
-    return _kernel
-
-
-def _refine_kernel_broadcast(id_cols: list[str], poly_bc):
-    """Refinement with the polygon table shipped once per executor (broadcast)
-    instead of per candidate row — the polygon side is a dim table (the
-    reference's restriction-broadcast pattern, SURVEY.md §2.3 J8/J9).
-    Map values are LISTS of (fp_lat, fp_lng, ring_starts|None) triples: an
-    id may map to several geometry PARTS (``split_antimeridian`` emits
-    seam-sharing parts under one id) — a point is inside the polygon iff
-    it is inside ANY part, and parts are lng-disjoint so a (point, id)
-    pair still survives at most one candidate row."""
-
-    def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        polys = poly_bc.value
-        pid_col = id_cols[1]
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                yield pdf[id_cols]
-                continue
-            pid = pdf[pid_col].to_numpy()
-            plat = pdf["__plat"].to_numpy()
-            plng = pdf["__plng"].to_numpy()
-            order, starts = _poly_groups(pid)
-            keep = np.zeros(n, dtype=bool)
-            bounds = np.append(starts, n)
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                idx = order[s:e]
-                inside = np.zeros(idx.size, dtype=bool)
-                for fp_lat, fp_lng, ring_starts in polys[pid[idx[0]]]:
-                    rem = ~inside
-                    if not rem.any():
-                        break
-                    inside[rem] = points_in_polygon_np(
-                        plat[idx[rem]], plng[idx[rem]], fp_lat, fp_lng,
-                        ring_starts=ring_starts,
-                    )
-                keep[idx] = inside
-            yield pdf[keep][id_cols]
-
-    return _kernel
-
-
-BROADCAST_POLY_LIMIT = 200_000
-BROADCAST_VERTEX_LIMIT = 5_000_000  # ≈80 MB of float64 lat/lng pairs
-
-
 def _is_axis_rect_expr(fp: str, lat_min: str = "lat_min", lat_max: str = "lat_max",
                        lng_min: str = "lng_min", lng_max: str = "lng_max") -> str:
     """True iff the footprint is exactly its bounding box (axis-aligned
@@ -1018,27 +918,24 @@ def point_in_polygon_join(
     lng: str = "lng",
     fp: str = "footprint",
     exact: bool = True,
-    broadcast_polys: bool | None = None,
     rings: str = "ring_offsets",
     carry: tuple[str, ...] = (),
-    refine: str | None = None,
 ) -> DataFrame:
     """Points ⋈ polygons containment join.
 
     ``carry`` lists extra POINT-side columns passed through to the output
     (e.g. an event timestamp for the streaming geofence aggregation) —
-    they ride along both the codegen rectangle path and the refinement
-    kernel without affecting the join logic.
+    they ride along the candidate join and refinement without affecting
+    the join logic.
 
     Multi-ring polygons (holes / OSM multipolygon shells): when the
     polygon table carries a ``rings`` column (``array<int>`` of ring start
     offsets into the flat footprint, e.g. ``[0, 4]`` for a donut; null or
     single-entry = plain polygon), the refinement sums ray crossings across
     rings — even-odd parity excludes hole interiors.  Multi-ring rows are
-    never rect-fast-pathed; single-ring rows are unaffected, so a
-    rectangles-only workload still never leaves codegen.
+    never rect-fast-pathed; single-ring rows are unaffected.
 
-    Plan (the whole join JVM-side by default):
+    Plan (the whole join JVM-side, zero Python stages):
 
     1. candidates: equi join on cell (point cell vs polygon covering cells);
     2. **bbox prefilter in codegen** — half-open bounds chosen to match the
@@ -1046,43 +943,28 @@ def point_in_polygon_join(
        lat_max/lng_max can never be inside; at lat_min/lng_min it can);
     3. **rectangle fast path** — footprints that are exactly their bbox
        (detected per row, see :func:`_is_axis_rect_expr`) are decided by the
-       prefilter alone, entirely in codegen;
-    4. non-rectangular bbox survivors refine through the PURE-COLUMN
-       even-odd ray cast (:func:`functions.geo.point_in_ring_expr`, the
-       float-exact twin of the numpy kernel) — the default ``refine="expr"``
-       path has ZERO Python stages, no pre-refinement rebalance shuffle and
-       no branch split, so the candidate join is planned exactly once.
+       prefilter alone;
+    4. non-rectangular bbox survivors refine through the unrolled even-odd
+       ray cast over each polygon's precomputed closed edge list
+       (:func:`_unrolled_ray_cast`, the float-exact twin of
+       :func:`functions.geo.points_in_polygon_np`, which stays the test
+       oracle) — no rebalance shuffle and no branch split, so the
+       candidate join is planned exactly once.
 
     Output pairs are unique by construction (a point lies in exactly one
     cell at ``res`` and each polygon covers a cell at most once), so there is
     no distinct — no extra shuffle of the result.
-
-    ``refine="python"`` (implied by passing ``broadcast_polys`` explicitly)
-    restores the Arrow-batched numpy kernels — the right tool when
-    footprints are huge (10k+ vertices), where one vectorized kernel call
-    per polygon group beats a per-row O(nv) expression.  There, when the
-    polygon side is dim-sized (≤ ``BROADCAST_POLY_LIMIT`` rows and
-    ≤ ``BROADCAST_VERTEX_LIMIT`` total vertices, probed with a bounded
-    ``limit(n+1)`` job — never an unbounded count/collect), its vertices are
-    broadcast to the refinement kernel so candidate rows carry only ids +
-    point coordinates.  ``broadcast_polys=False`` forces the carry-along
-    kernel (arbitrarily large polygon tables).
     """
     from navgraph_osm_spark.sources.tables import spread_scan
 
-    sc = points.sparkSession.sparkContext
     has_rings = rings in polygons.columns
     single_ring = f"({rings} IS NULL OR size({rings}) <= 1)" if has_rings else "true"
     # a multi-ring footprint is never a plain rectangle
     rect = f"({_is_axis_rect_expr(fp)}) AND {single_ring}"
     poly_cols = [poly_id, fp] + ([rings] if has_rings else [])
-    if refine is None:
-        # an explicit broadcast_polys choice selects the kernel machinery it
-        # configures; otherwise the zero-Python expression path
-        refine = "python" if broadcast_polys is not None else "expr"
-    # candidate generation + (expr-mode) refinement run inside the point
-    # side's scan tasks when the polygon side broadcasts — spread an
-    # unsplittable single-file point input (no-op on parallel scans)
+    # candidate generation + refinement run inside the point side's scan
+    # tasks when the polygon side broadcasts — spread an unsplittable
+    # single-file point input (no-op on parallel scans)
     pts = assign_cells(
         spread_scan(points.select(point_id, lat, lng, *carry)), res, lat, lng
     )
@@ -1090,7 +972,7 @@ def point_in_polygon_join(
     # whole candidate/refinement pipeline run inside the polygon side's
     # scan tasks — spread that too (no-op on already-parallel scans)
     poly_src = spread_scan(polygons.select(*poly_cols))
-    if exact and refine == "expr":
+    if exact:
         # closed edge list once per polygon ROW (pre-explode); the raw
         # footprint is then prunable from the covering explode + join
         poly_src = poly_src.withColumn(
@@ -1110,102 +992,8 @@ def point_in_polygon_join(
     cand = pts.join(polys, "cell").filter(
         f"{lat} >= lat_min AND {lat} < lat_max AND {lng} >= lng_min AND {lng} < lng_max"
     )
-    if not exact:
-        return cand.select(point_id, poly_id, *carry)
-    if refine == "expr":
-        return cand.filter(
+    if exact:
+        cand = cand.filter(
             f"CASE WHEN __rect THEN true ELSE {_unrolled_ray_cast(lat, lng, '__edges')} END"
-        ).select(point_id, poly_id, *carry)
-    rect_hits = cand.filter("__rect").select(point_id, poly_id, *carry)
-    rest = cand.filter("NOT __rect")
-
-    n_nonrect = None
-    probed_map = None
-    if broadcast_polys is None:
-        # ONE bounded probe job decides (a) broadcastability, (b) whether
-        # the Python refinement branch can receive any rows at all — an
-        # all-rectangle workload (the raster↔vector tiling case) then never
-        # runs a polygon collect() or a mapInPandas stage — and (c) ships
-        # the NON-rect vertices for the broadcast map in the same pass, so
-        # no second collect job ever runs.
-        probe = (
-            footprint_bbox(polygons.select(*poly_cols), fp)
-            .selectExpr(
-                poly_id,
-                f"size({fp}) AS nv",
-                f"{rect} AS rect",
-                f"CASE WHEN NOT ({rect}) THEN {fp} END AS __fp",
-                (f"CASE WHEN NOT ({rect}) THEN {rings} END" if has_rings else "NULL")
-                + " AS __rings",
-            )
-            .limit(BROADCAST_POLY_LIMIT + 1)
-            .collect()
         )
-        if len(probe) <= BROADCAST_POLY_LIMIT:
-            n_nonrect = sum(0 if r["rect"] else 1 for r in probe)
-        broadcast_polys = (
-            len(probe) <= BROADCAST_POLY_LIMIT
-            and sum(r["nv"] for r in probe) <= BROADCAST_VERTEX_LIMIT
-        )
-        if broadcast_polys:
-            probed_map = {}
-            for r in probe:
-                if r["rect"]:
-                    continue
-                probed_map.setdefault(r[poly_id], []).append((
-                    np.array([p["lat"] for p in r["__fp"]], dtype=np.float64),
-                    np.array([p["lng"] for p in r["__fp"]], dtype=np.float64),
-                    r["__rings"],
-                ))
-    if n_nonrect == 0:
-        return rect_hits
-
-    rest_cols = [point_id, poly_id, *carry, f"{lat} AS __plat", f"{lng} AS __plng"]
-    if not broadcast_polys:
-        rest_cols += [
-            f"transform({fp}, __p -> __p.lat) AS __fp_lat",
-            f"transform({fp}, __p -> __p.lng) AS __fp_lng",
-        ]
-        if has_rings:
-            rest_cols.append(f"{rings} AS __fp_rings")
-    rest = rest.selectExpr(*rest_cols)
-    # refinement input inherits the cell join's skew (dense city-core cells);
-    # refinement is row-independent, so rebalance before the python stage.
-    # Partitioning by (poly_id, salt) keeps each Arrow batch dense in few
-    # polygons (the kernel vectorizes per polygon), salt caps per-poly skew.
-    # No explicit partition count: AQE coalesces the shuffle output to its
-    # target size, so a small survivor set doesn't fan out into dozens of
-    # near-empty Python tasks (measured ~1s at sf0.1) while a 100 TB
-    # survivor set still spreads across spark.sql.shuffle.partitions.
-    rest = rest.repartition(
-        F.col(poly_id),
-        F.pmod(F.xxhash64(point_id), F.lit(16)),
-    )
-    dtypes = dict(rest.dtypes)
-    out_schema = ", ".join(
-        f"{c} {dtypes[c]}" for c in (point_id, poly_id, *carry)
-    )
-    if broadcast_polys:
-        # only NON-rect polygons can reach the refinement kernel — their
-        # vertices came back with the probe when one ran; a caller-forced
-        # broadcast collects them here instead
-        if probed_map is not None:
-            poly_map = probed_map
-        else:
-            nonrect = footprint_bbox(polygons.select(*poly_cols), fp).filter(
-                f"NOT ({rect})"
-            )
-            poly_map = {}
-            for r in nonrect.select(*poly_cols).collect():
-                poly_map.setdefault(r[poly_id], []).append((
-                    np.array([p["lat"] for p in r[fp]], dtype=np.float64),
-                    np.array([p["lng"] for p in r[fp]], dtype=np.float64),
-                    r[rings] if has_rings else None,
-                ))
-        kernel = _refine_kernel_broadcast(
-            [point_id, poly_id, *carry], sc.broadcast(poly_map)
-        )
-    else:
-        kernel = _refine_kernel([point_id, poly_id, *carry], has_rings=has_rings)
-    refined = rest.mapInPandas(kernel, schema=out_schema)
-    return rect_hits.unionByName(refined)
+    return cand.select(point_id, poly_id, *carry)

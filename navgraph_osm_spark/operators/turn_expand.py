@@ -55,7 +55,6 @@ def split_restrictions(restrictions: DataFrame, edges: DataFrame) -> tuple[DataF
 def expand_turns(
     edges: DataFrame,
     restrictions: DataFrame,
-    materialize: bool = False,
     strict_only: bool = False,
 ) -> DataFrame:
     """J4-J9 + F6 → expanded-edge DataFrame.
@@ -74,25 +73,18 @@ def expand_turns(
     set semantics: every edge of the mandated to-way (see the divergence
     note below) — the north_rule's count/set equivalence accepts either.
 
-    ``materialize=True`` persists the (pruned) edge relation before the
-    self-join so the upstream edge-build pipeline isn't planned twice.
-    Measured on this box, the pruned double-compute is cheaper than the
-    persist barrier (sf0.1: 7.7s vs 12.6s), so the default is False; the
-    production-scale answer is neither — feed an already-materialized edges
-    checkpoint table (pipeline.py), the Spark analogue of the reference
-    writing edge files before EP3 (reference main.cpp:587-708 → 918).
-
-    Note the projection: only join-relevant columns are selected up front —
-    persisting the full relation would force computing/storing the geometry
-    arrays this operator never reads (persist defeats column pruning).
+    The self-join reads ``edges`` twice, so an uncached edge-build plan
+    runs twice; the pipeline feeds a checkpointed edges table instead
+    (a persist barrier measured slower than the pruned double compute,
+    sf0.1: 12.6s vs 7.7s) — the Spark analogue of the reference writing
+    edge files before EP3 (reference main.cpp:587-708 → 918).  Only the
+    join-relevant columns are selected up front.
     """
     slim_cols = [
         "edge_id", "way_id", "cost", "src_node", "tgt_node",
         "src_cell", "tgt_cell", "src_lat", "src_lng", "tgt_lat", "tgt_lng",
     ]
     edges = edges.select(*slim_cols)
-    if materialize:
-        edges = edges.persist()
     a, b = turn_sides(edges)
     # deliberate SHUFFLE_HASH for the shuffled self-join (guide §3.1): the
     # per-partition build side is bounded by the shuffle, and sort-merge

@@ -61,9 +61,7 @@ def build_pipeline(
                 n_buckets=n_buckets,
                 strict_only=strict_turns,
             )
-        return expand_turns(
-            deps["edges"], restrictions, materialize=False, strict_only=strict_turns
-        )
+        return expand_turns(deps["edges"], restrictions, strict_only=strict_turns)
 
     def st_export(deps):
         return export_rows(deps["edges"].drop("part_cell"), deps["turns"])

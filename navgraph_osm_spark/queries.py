@@ -860,8 +860,8 @@ def sp_cell_histogram(spark, sf_dir):
 def triangles_as_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NON-rectangular footprints derived from the box params: the right
     triangle (lat0,lng0)-(lat0,lng1)-(lat1,lng0), ids offset by 1e6.  These
-    rows fail the rectangle fast path and exercise the Arrow ray-casting
-    refinement kernel — which the oracle reproduces bit-for-bit."""
+    rows fail the rectangle fast path and exercise the ray-cast
+    refinement — which the oracle reproduces bit-for-bit."""
     b = boxes_df(spark, sf_dir)
     fp = F.array(
         F.struct(F.col("lat0").alias("lat"), F.col("lng0").alias("lng")),
@@ -957,7 +957,7 @@ _TRI_CROSSING_SQL = """
 def sp_pip_join(spark, sf_dir):
     """Headline spatial join over a MIXED polygon set: rectangles (decided
     entirely in codegen by the bbox prefilter + rect fast path), planted
-    right triangles (routed through the Arrow ray-cast refinement), and
+    right triangles (routed through the codegen ray-cast refinement), and
     planted DONUTS (multi-ring footprints with a hole — the ring-summed
     even-odd path).  ALL THREE paths are oracled — the triangle half
     reproduces the kernel's even-odd crossing arithmetic in SQL and the

@@ -260,7 +260,6 @@ def resize_batches(size: int = 8):
     return _kernel
 
 
-EMBED_DIM = 8 * 8 * 3
 EMBED_SCHEMA = "image_id string, embedding array<float>"
 
 

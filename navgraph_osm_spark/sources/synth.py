@@ -24,10 +24,9 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from navgraph_osm_spark.sources.codec import decode_image, encode_image, phash64
+from navgraph_osm_spark.sources.codec import encode_image
 
 # ---------------------------------------------------------------------------
 # splitmix64 — the standard public-domain mixer, vectorized
@@ -515,24 +514,3 @@ def gen_road_grid(
         "relation_tags": relation_tags,
         "restrictions": restrictions,
     }
-
-
-def derived_points_from_part(part: DataFrame) -> DataFrame:
-    """Deterministic lat/lng per p_partkey via modular arithmetic.
-
-    Used by oracle-checked spatial queries: the identical formula is
-    reproducible in ANSI SQL (see __spark_entry__.py), so Spark and DuckDB
-    derive the same points from the driver's tables.
-    """
-    k = F.col("p_partkey").cast("long")
-    lat = ((k * 7919) % 170000) / 1000.0 - 85.0
-    lng = ((k * 104729) % 360000) / 1000.0 - 180.0
-    return part.select(k.alias("point_id"), lat.alias("lat"), lng.alias("lng"))
-
-
-POINTS_FROM_PART_SQL = (
-    "SELECT CAST(p_partkey AS BIGINT) AS point_id, "
-    "((CAST(p_partkey AS BIGINT) * 7919) % 170000) / 1000.0 - 85.0 AS lat, "
-    "((CAST(p_partkey AS BIGINT) * 104729) % 360000) / 1000.0 - 180.0 AS lng "
-    "FROM part"
-)

@@ -2,7 +2,7 @@
 
 The production shape for a moving-object feed (vehicle pings, AIS
 positions, photo uploads) against a static zone table: the polygon side is
-a dim table whose covering cells + broadcast vertices are planned ONCE;
+a dim table whose covering cells + closed edge lists are planned ONCE;
 the point stream gets its cell in codegen; candidates come from a
 stream-static equi join on ``cell`` (stateless — no stream state, no
 watermark needed for the join itself); refinement reuses the batch PIP
@@ -11,9 +11,8 @@ where a watermark bounds state.
 
 Everything here composes the batch operators — the join is literally
 :func:`operators.spatial_join.point_in_polygon_join` applied to a
-streaming DataFrame (its candidate work is stateless projections/joins,
-legal in Structured Streaming; the polygon-side probe/collect runs at
-plan time on the static side).
+streaming DataFrame (its candidate and refinement work is stateless
+projections/joins/filters, legal in Structured Streaming).
 """
 
 from __future__ import annotations
@@ -35,11 +34,10 @@ def streaming_geofence_join(
     """Streaming points ⋈ static polygons: one output row per (point,
     containing polygon) with the event time carried through.
 
-    The rectangle fast path stays pure codegen on the stream; non-rect
-    polygons refine through the broadcast Arrow kernel (the static side
-    satisfies the dim-table contract by construction — zones are
-    thousands, not billions).  Output is append-safe: stateless, no
-    aggregation state.
+    The rectangle fast path and the non-rect ray cast both stay in
+    codegen on the stream (the static side carries each zone's edge list;
+    zones are thousands, not billions).  Output is append-safe:
+    stateless, no aggregation state.
     """
     return point_in_polygon_join(
         points_stream,

@@ -278,8 +278,8 @@ def test_streaming_stateful_running_stats(spark, events_dir):
 def test_streaming_geofence_matches_batch(spark, tmp_path_factory):
     """Stream-static geofencing: the streaming PIP join over a file-source
     point stream must produce exactly the batch point_in_polygon_join
-    pairs (rect zones via codegen AND a triangle zone via the broadcast
-    refinement kernel), and the windowed per-zone counts must sum to the
+    pairs (a rect zone via the rect fast path AND a triangle zone via the
+    ray-cast refinement), and the windowed per-zone counts must sum to the
     matched row count."""
     from navgraph_osm_spark.operators.spatial_join import point_in_polygon_join
     from navgraph_osm_spark.streaming.events import run_to_memory
@@ -313,10 +313,10 @@ def test_streaming_geofence_matches_batch(spark, tmp_path_factory):
 
     zones = spark.createDataFrame(
         pd.DataFrame([
-            {"poly_id": 1, "footprint": [  # rect zone (codegen path)
+            {"poly_id": 1, "footprint": [  # rect zone (rect fast path)
                 {"lat": 48.2, "lng": 1.8}, {"lat": 48.2, "lng": 2.6},
                 {"lat": 48.9, "lng": 2.6}, {"lat": 48.9, "lng": 1.8}]},
-            {"poly_id": 2, "footprint": [  # triangle zone (kernel path)
+            {"poly_id": 2, "footprint": [  # triangle zone (ray-cast path)
                 {"lat": 48.9, "lng": 2.0}, {"lat": 49.4, "lng": 3.4},
                 {"lat": 48.9, "lng": 3.4}]},
         ]),

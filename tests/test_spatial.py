@@ -120,32 +120,12 @@ def test_tile_assignment_oracle(spark):
         assert got_cells == want, r["image_id"]
 
 
-def test_pip_join_carry_along_path(points, polygons):
-    """broadcast_polys=False (carry-along kernel) must equal the broadcast path."""
-    pts_df, _ = points
-    poly_df, _ = polygons
-    bc = {
-        (r["point_id"], r["poly_id"])
-        for r in point_in_polygon_join(
-            pts_df, poly_df, RES, broadcast_polys=True
-        ).collect()
-    }
-    carry = {
-        (r["point_id"], r["poly_id"])
-        for r in point_in_polygon_join(
-            pts_df, poly_df, RES, broadcast_polys=False
-        ).collect()
-    }
-    assert carry == bc
-    assert len(carry) > 0
-
-
 def test_pip_join_same_lat_different_lng_polygons(spark, points):
     """Two polygons with identical lat arrays but different lng arrays must
-    not be conflated by the carry-along kernel (regression: the kernel used
-    to group candidate rows by lat bytes only)."""
+    not be conflated (regression: an earlier refinement kernel grouped
+    candidate rows by lat bytes only)."""
     pts_df, pts_pdf = points
-    # triangles (non-rect → kernel path) in the same latitude row
+    # triangles (non-rect → ray-cast path) in the same latitude row
     tri = lambda lng0: [  # noqa: E731
         {"lat": 48.2, "lng": lng0},
         {"lat": 49.3, "lng": lng0 + 0.5},
@@ -156,23 +136,20 @@ def test_pip_join_same_lat_different_lng_polygons(spark, points):
                       {"poly_id": 1, "footprint": tri(2.4)}]),
         schema="poly_id long, footprint array<struct<lat:double,lng:double>>",
     )
-    for bcast in (True, False):
-        got = {
-            (r["point_id"], r["poly_id"])
-            for r in point_in_polygon_join(
-                pts_df, poly_df, RES, broadcast_polys=bcast
-            ).collect()
-        }
-        want = set()
-        for pid, lng0 in ((0, 1.6), (1, 2.4)):
-            fp = tri(lng0)
-            inside = points_in_polygon_np(
-                pts_pdf["lat"].to_numpy(), pts_pdf["lng"].to_numpy(),
-                np.array([p["lat"] for p in fp]), np.array([p["lng"] for p in fp]),
-            )
-            want |= {(int(i), pid) for i in pts_pdf["point_id"][inside]}
-        assert got == want, f"broadcast_polys={bcast}"
-        assert len(got) > 0
+    got = {
+        (r["point_id"], r["poly_id"])
+        for r in point_in_polygon_join(pts_df, poly_df, RES).collect()
+    }
+    want = set()
+    for pid, lng0 in ((0, 1.6), (1, 2.4)):
+        fp = tri(lng0)
+        inside = points_in_polygon_np(
+            pts_pdf["lat"].to_numpy(), pts_pdf["lng"].to_numpy(),
+            np.array([p["lat"] for p in fp]), np.array([p["lng"] for p in fp]),
+        )
+        want |= {(int(i), pid) for i in pts_pdf["point_id"][inside]}
+    assert got == want
+    assert len(got) > 0
 
 
 def test_pip_rect_fast_path_matches_kernel(spark, points):
@@ -185,7 +162,7 @@ def test_pip_rect_fast_path_matches_kernel(spark, points):
     ]
     r1 = r0 + [r0[0]]  # explicitly closed ring (5 points)
     r2 = list(reversed(r0))  # opposite winding
-    bowtie = [r0[0], r0[2], r0[1], r0[3]]  # NOT a rectangle: kernel path
+    bowtie = [r0[0], r0[2], r0[1], r0[3]]  # NOT a rectangle: ray-cast path
     poly_df = spark.createDataFrame(
         pd.DataFrame(
             [{"poly_id": i, "footprint": fp} for i, fp in enumerate([r0, r1, r2, bowtie])]
@@ -237,10 +214,9 @@ def test_knn_bruteforce_matches_numpy(points):
 
 def test_pip_join_multiring_holes(spark, points):
     """Multi-ring footprints (ring_offsets column): a donut and a two-shell
-    multipolygon, refined by ring-summed even-odd crossings.  Both kernel
-    paths (broadcast map and carry-along columns) must equal the numpy
-    oracle with the SAME ring splitting, and a point inside the hole must
-    never match."""
+    multipolygon, refined by ring-summed even-odd crossings.  The join must
+    equal the numpy oracle with the SAME ring splitting, and a point inside
+    the hole must never match."""
     pts_df, pdf = points
     rows = [
         {  # donut: outer box with a centered hole
@@ -290,14 +266,11 @@ def test_pip_join_multiring_holes(spark, points):
 
     want = _oracle()
     assert want, "fixture must produce hits"
-    for bcast in (True, False):
-        got = {
-            (r["point_id"], r["poly_id"])
-            for r in point_in_polygon_join(
-                pts_df, poly_df, RES, broadcast_polys=bcast
-            ).collect()
-        }
-        assert got == want, f"broadcast_polys={bcast}"
+    got = {
+        (r["point_id"], r["poly_id"])
+        for r in point_in_polygon_join(pts_df, poly_df, RES).collect()
+    }
+    assert got == want
     # hole exclusion: a point dead-center of poly 1's hole is not a hit
     probe = spark.createDataFrame(
         pd.DataFrame({"point_id": [99001, 99002],
@@ -313,7 +286,8 @@ def test_pip_join_multiring_holes(spark, points):
 
 def test_pip_rect_fast_path_unaffected_by_ring_column(spark, points):
     """Single-ring rectangles with a ring_offsets column present (null or
-    [0]) still take the codegen rect fast path — no Python stage planned."""
+    [0]) still take the codegen rect fast path — no Python stage planned.
+    Non-rect inputs (a triangle and a donut) refine in codegen too."""
     pts_df, pdf = points
     rows = [
         {"poly_id": 7,
@@ -343,6 +317,24 @@ def test_pip_rect_fast_path_unaffected_by_ring_column(spark, points):
         want |= {(int(p), r["poly_id"]) for p in pdf["point_id"][m]}
     got = {(r["point_id"], r["poly_id"]) for r in out.collect()}
     assert got == want
+    nonrect = spark.createDataFrame(pd.DataFrame([
+        {"poly_id": 9,
+         "footprint": [
+             {"lat": 48.2, "lng": 1.6}, {"lat": 49.3, "lng": 2.1},
+             {"lat": 48.2, "lng": 2.6}],
+         "ring_offsets": None},
+        {"poly_id": 10,
+         "footprint": [
+             {"lat": 48.2, "lng": 1.8}, {"lat": 48.2, "lng": 3.2},
+             {"lat": 49.3, "lng": 3.2}, {"lat": 49.3, "lng": 1.8},
+             {"lat": 48.5, "lng": 2.2}, {"lat": 48.5, "lng": 2.8},
+             {"lat": 49.0, "lng": 2.8}, {"lat": 49.0, "lng": 2.2}],
+         "ring_offsets": [0, 4]},
+    ]), schema=schema)
+    plan = point_in_polygon_join(
+        pts_df, nonrect, RES
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
 
 
 def _pnpoly(px, py, xs, ys):
@@ -1408,8 +1400,7 @@ def test_compact_uncompact_cells(spark):
 def test_pip_expr_refinement_hof_tail_beyond_unroll(spark):
     """Round-6: the default codegen refinement unrolls 16 edges and routes
     longer footprints through a lazily-evaluated HOF tail — a 24-vertex
-    star polygon must refine identically to the numpy kernel through BOTH
-    the expr default and the python kernel path."""
+    star polygon must refine identically to the numpy kernel."""
     import numpy as np
     import pandas as pd
 
@@ -1441,15 +1432,8 @@ def test_pip_expr_refinement_hof_tail_beyond_unroll(spark):
         ),
         "poly_id long, footprint array<struct<lat:double,lng:double>>",
     )
-    got_expr = {
+    got = {
         r["point_id"]
         for r in point_in_polygon_join(pts_df, poly_df, res=6).collect()
     }
-    got_py = {
-        r["point_id"]
-        for r in point_in_polygon_join(
-            pts_df, poly_df, res=6, refine="python", broadcast_polys=True
-        ).collect()
-    }
-    assert got_expr == want
-    assert got_py == want
+    assert got == want
