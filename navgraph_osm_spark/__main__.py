@@ -93,8 +93,6 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> di
     ap.add_argument("--demo-grid", default=None, metavar="ROWSxCOLS")
     ap.add_argument("--strict-turns", action="store_true",
                     help="reference first-match only_* semantics (invert.hpp:51-56)")
-    ap.add_argument("--bucketed-turns", action="store_true",
-                    help="materialize bucketed turn-join sides (exchange-free J4-J6)")
     args = ap.parse_args(argv)
     if args.input_dir is None and args.demo_grid is None:
         ap.error("provide an input_dir or --demo-grid ROWSxCOLS")
@@ -135,16 +133,12 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> di
             tables = _load_inputs(spark, args.input_dir)
         out = run_full_pipeline(
             spark, warehouse, tables, res=args.res, resume=not args.no_resume,
-            strict_turns=args.strict_turns, bucketed_turns=args.bucketed_turns,
+            strict_turns=args.strict_turns,
         )
         if args.output_csv:
-            # emit the reference's exact 9-column row shape (the midpoint
-            # columns on export_rows are oracle-internal)
-            from navgraph_osm_spark.operators.export import REFERENCE_CSV_COLUMNS
+            from navgraph_osm_spark.operators.export import write_csv
 
-            out["export"].select(*REFERENCE_CSV_COLUMNS).write.mode(
-                "overwrite"
-            ).option("header", True).csv(args.output_csv)
+            write_csv(out["export"], args.output_csv)
         # the reference's stderr counters (filestat.hpp:7-20, main.cpp:204-222)
         counts = out["counts"].first().asDict()
         counts["expanded_edges"] = out["turns"].count()

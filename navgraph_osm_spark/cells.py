@@ -191,10 +191,6 @@ def cell_expr(lat: str, lng: str, res: int) -> str:
     return cell_from_xy_expr(*xy_expr(lat, lng, res), res)
 
 
-def cell_parent_expr(cell: str, steps: int = 1) -> str:
-    return f"shiftright({cell}, {2 * steps})"
-
-
 def cell_from_xy_expr(x: str, y: str, res: int) -> str:
     """(x, y) grid coordinates → hierarchical cell id (SQL text)."""
     sx = _spread_bits_expr(f"CAST({x} AS BIGINT)")

@@ -13,210 +13,110 @@ node → midpoint(target edge) (reference generate.hpp:187-216, midpoints
 geomath.cpp:77-97).
 
 J10's offset joins become two DataFrame joins on edge id; the geometry
-midpoint interpolation runs in one ``mapInArrow`` kernel vectorized over
-the ListArray offsets (zero per-row Python); the final string assembly is
-``format_number``/``concat_ws`` column expressions.
+midpoint and the two half-polylines are one Spark SQL expression
+(:func:`halves_expr`: ``zip_with`` legs, ``aggregate`` folds, ``slice``/
+``concat``) and the string assembly is ``format_number``/``concat_ws``, so
+the export runs no Python; every projection is Spark SQL text.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-_HALF_SCHEMA = "edge_id long, half_out array<struct<lat:double,lng:double>>, half_in array<struct<lat:double,lng:double>>"
 
 
-def _excl_cumsum(x: np.ndarray) -> np.ndarray:
-    out = np.empty(x.size, dtype=np.int64)
-    if x.size:
-        out[0] = 0
-        np.cumsum(x[:-1], out=out[1:])
-    return out
+def _let(name: str, value: str, body: str) -> str:
+    """``body`` with the lambda variable ``name`` bound to ``value``,
+    which is evaluated once per row (SQL text)."""
+    return f"transform(array({value}), {name} -> {body})[0]"
 
 
-def _halves_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """Per edge: polyline from its midpoint to its end (``half_out``) and
-    from its start to its midpoint (``half_in``) — W4, reference
-    geomath.cpp:77-97 + csv/generate.hpp:187-216.
+def _leg_expr(p: str, q: str) -> str:
+    """Planar length of the leg from point ``p`` to point ``q`` (reference
+    findDistance, geomath.cpp:48-53) — the DuckDB oracles' formula."""
+    dlat, dlng = f"({q}.lat - {p}.lat)", f"({q}.lng - {p}.lng)"
+    return f"sqrt({dlat} * {dlat} + {dlng} * {dlng})"
 
-    Fully vectorized over the Arrow ListArray offsets: the lat/lng child
-    arrays are used flat (zero-copy), per-edge running lengths come from an
-    O(max_points_per_edge) loop that is vectorized ACROSS edges (bit-exact
-    with a sequential per-edge cumsum — the same association order as the
-    SQL oracle's windowed SUM; a plain sum() would use numpy's pairwise
-    summation and drift at the last ulp), and the output lists are built
-    with ``ListArray.from_arrays`` — no per-row Python, no dicts.
+
+def halves_expr(geom: str) -> str:
+    """``struct<half_out, half_in>`` of the polyline ``geom`` split at the
+    point at half its Euclidean length (SQL text) — W4, reference
+    geomath.cpp:77-97 + csv/generate.hpp:187-216: ``half_out`` runs from
+    that midpoint to the end, ``half_in`` from the start to the midpoint.
+
+    ``split`` counts the running offsets ``<= half`` (offset 0 included,
+    searchsorted-right semantics); vertices before it go to ``half_in``.
+    Offsets are summed left to right by ``aggregate``, the association
+    order of the oracles' windowed SUM.  A zero-length (or 1-point)
+    polyline takes its first point as the midpoint.
     """
-    import pyarrow.compute as pc
-
-    for rb in batches:
-        counts0 = pc.list_value_length(rb.column(1)).to_numpy().astype(np.int64)
-        if counts0.size == 0:
-            continue
-        ok = counts0 >= 2
-        if not ok.all():
-            # degenerate (<2 point) geometries never occur in the edge
-            # builder's output; split them out ROW-WISE so ordinary edges in
-            # the same batch keep the vector path's exact arithmetic (batch
-            # composition must never change a normal edge's midpoint)
-            bad = rb.take(pa.array(np.flatnonzero(~ok)))
-            yield from _halves_fallback(bad)
-            if not ok.any():
-                continue
-            rb = rb.take(pa.array(np.flatnonzero(ok)))
-        edge_ids = rb.column(0)
-        geom = rb.column(1)
-        counts = pc.list_value_length(geom).to_numpy().astype(np.int64)
-        flat = pc.list_flatten(geom)
-        lats = flat.field("lat").to_numpy()
-        lngs = flat.field("lng").to_numpy()
-        starts = _excl_cumsum(counts)
-        ends = starts + counts
-        big_n = lats.size
-        # leg length from each flat point to the next; 0 across edge bounds
-        d = np.zeros(big_n, dtype=np.float64)
-        d[:-1] = np.hypot(np.diff(lats), np.diff(lngs))
-        d[ends - 1] = 0.0
-        within = np.zeros(big_n, dtype=np.float64)
-        for k in range(int(counts.max()) - 1):
-            sel = counts > k + 1
-            q = starts[sel] + k
-            within[q + 1] = within[q] + d[q]
-        totals = within[ends - 1]
-        half = totals / 2.0
-        # split index: #cum entries <= half (== searchsorted right)
-        split = np.add.reduceat(
-            (within <= np.repeat(half, counts)).astype(np.int64), starts
-        )
-        # midpoint leg: last leg whose start offset <= half; zero-length
-        # polylines take their first point (find_middle_point semantics)
-        i0 = np.minimum(split - 1, counts - 2)
-        i0 = np.where(totals == 0.0, 0, i0)
-        q = starts + i0
-        leg = d[q]
-        frac = np.where(leg > 0, (half - within[q]) / np.where(leg > 0, leg, 1.0), 0.0)
-        mlat = lats[q] + (lats[q + 1] - lats[q]) * frac
-        mlng = lngs[q] + (lngs[q + 1] - lngs[q]) * frac
-
-        def build(head_counts, head_src, mid_first):
-            out_counts = head_counts + 1
-            tot = int(out_counts.sum())
-            out_lat = np.empty(tot, np.float64)
-            out_lng = np.empty(tot, np.float64)
-            out_starts = _excl_cumsum(out_counts)
-            mid_pos = out_starts if mid_first else out_starts + head_counts
-            out_lat[mid_pos] = mlat
-            out_lng[mid_pos] = mlng
-            n_head = int(head_counts.sum())
-            if n_head:
-                off = np.arange(n_head, dtype=np.int64) - np.repeat(
-                    _excl_cumsum(head_counts), head_counts
-                )
-                src = np.repeat(head_src, head_counts) + off
-                dest = np.repeat(
-                    out_starts + (1 if mid_first else 0), head_counts
-                ) + off
-                out_lat[dest] = lats[src]
-                out_lng[dest] = lngs[src]
-            struct = pa.StructArray.from_arrays(
-                [pa.array(out_lat), pa.array(out_lng)], ["lat", "lng"]
-            )
-            offs = np.concatenate(([0], np.cumsum(out_counts))).astype(np.int32)
-            return pa.ListArray.from_arrays(pa.array(offs, pa.int32()), struct)
-
-        yield pa.RecordBatch.from_arrays(
-            [
-                edge_ids,
-                build(counts - split, starts + split, mid_first=True),
-                build(split, starts, mid_first=False),
-            ],
-            ["edge_id", "half_out", "half_in"],
-        )
-
-
-def _halves_fallback(rb: pa.RecordBatch) -> Iterator[pa.RecordBatch]:
-    """Row-at-a-time path for degenerate (<2 point) geometries only."""
-    from navgraph_osm_spark.functions.geo import find_middle_point_np
-
-    out = {"edge_id": [], "half_out": [], "half_in": []}
-    for edge_id, geom in zip(rb.column(0).to_pylist(), rb.column(1).to_pylist()):
-        lats = np.array([p["lat"] for p in geom])
-        lngs = np.array([p["lng"] for p in geom])
-        mlat, mlng = find_middle_point_np(lats, lngs)
-        legs = np.hypot(np.diff(lats), np.diff(lngs))
-        cum = np.concatenate(([0.0], np.cumsum(legs)))
-        i = int(np.searchsorted(cum, cum[-1] / 2.0, side="right"))
-        mid = {"lat": float(mlat), "lng": float(mlng)}
-        pts = [{"lat": float(a), "lng": float(b)} for a, b in zip(lats, lngs)]
-        out["edge_id"].append(edge_id)
-        out["half_out"].append([mid] + pts[i:])
-        out["half_in"].append(pts[:i] + [mid])
-    pt = pa.struct([("lat", pa.float64()), ("lng", pa.float64())])
-    yield pa.RecordBatch.from_arrays(
-        [
-            pa.array(out["edge_id"], pa.int64()),
-            pa.array(out["half_out"], pa.list_(pt)),
-            pa.array(out["half_in"], pa.list_(pt)),
-        ],
-        ["edge_id", "half_out", "half_in"],
+    n = f"size({geom})"
+    legs = (
+        f"zip_with(slice({geom}, 1, {n} - 1), slice({geom}, 2, {n} - 1), "
+        f"(__p, __q) -> {_leg_expr('__p', '__q')})"
     )
+    total = "aggregate(__legs, 0.0D, (__a, __v) -> __a + __v)"
+    # one left fold: running offset, last offset <= half, count of offsets <= half
+    below = "__s.off + __v <= __total / 2.0D"
+    fold = (
+        "aggregate(__legs, struct(0.0D AS off, 0.0D AS last, 1 AS split), (__s, __v) -> "
+        f"struct(__s.off + __v AS off, IF({below}, __s.off + __v, __s.last) AS last, "
+        f"__s.split + IF({below}, 1, 0) AS split))"
+    )
+    # the leg holding the midpoint, from offset __fold.last (whenever the
+    # leg is not zero-length); i0 + 1 is clamped for 1-point polylines
+    i0 = "IF(__total = 0.0D, 0, __fold.split - 1)"
+    seg = f"struct({geom}[{i0}] AS p, {geom}[least({i0} + 1, {n} - 1)] AS q)"
+    leg = _leg_expr("__seg.p", "__seg.q")
+    frac = f"IF({leg} > 0.0D, (__total / 2.0D - __fold.last) / {leg}, 0.0D)"
+    mid = (
+        "struct(__seg.p.lat + (__seg.q.lat - __seg.p.lat) * __frac AS lat, "
+        "__seg.p.lng + (__seg.q.lng - __seg.p.lng) * __frac AS lng)"
+    )
+    tail = f"slice({geom}, __fold.split + 1, {n} - __fold.split)"
+    halves = (
+        f"struct(concat(array(__mid), {tail}) AS half_out, "
+        f"concat(slice({geom}, 1, __fold.split), array(__mid)) AS half_in)"
+    )
+    for name, value in reversed(
+        [("__legs", legs), ("__total", total), ("__fold", fold),
+         ("__seg", seg), ("__frac", frac), ("__mid", mid)]
+    ):
+        halves = _let(name, value, halves)
+    return halves
 
 
 def export_rows(edges: DataFrame, exp_edges: DataFrame) -> DataFrame:
     """Expanded edges joined to edge geometry, with formatted LINESTRING."""
-    halves = edges.select("edge_id", "geom").mapInArrow(_halves_kernel, schema=_HALF_SCHEMA)
-    src = edges.select(
-        F.col("edge_id").alias("src_edge_id"),
-        F.col("oneway").alias("src_oneway"),
-        F.col("src_node").alias("from_source_node"),
-        F.col("tgt_node").alias("from_target_node"),
-    ).join(halves.select(F.col("edge_id").alias("src_edge_id"), "half_out"), "src_edge_id")
-    tgt = edges.select(
-        F.col("edge_id").alias("tgt_edge_id"),
-        F.col("src_node").alias("to_source_node"),
-        F.col("tgt_node").alias("to_target_node"),
-    ).join(halves.select(F.col("edge_id").alias("tgt_edge_id"), "half_in"), "tgt_edge_id")
+    halves = edges.selectExpr("edge_id", f"{halves_expr('geom')} AS h").selectExpr(
+        "edge_id", "h.half_out", "h.half_in"
+    )
+    src = edges.selectExpr(
+        "edge_id AS src_edge_id", "oneway AS src_oneway",
+        "src_node AS from_source_node", "tgt_node AS from_target_node",
+    ).join(halves.selectExpr("edge_id AS src_edge_id", "half_out"), "src_edge_id")
+    tgt = edges.selectExpr(
+        "edge_id AS tgt_edge_id", "src_node AS to_source_node", "tgt_node AS to_target_node",
+    ).join(halves.selectExpr("edge_id AS tgt_edge_id", "half_in"), "tgt_edge_id")
 
     joined = exp_edges.join(src, "src_edge_id").join(tgt, "tgt_edge_id")
     # geometry: midpoint(src)…via…midpoint(tgt); drop the duplicated via point
-    line = F.concat(
-        F.col("half_out"), F.slice(F.col("half_in"), 2, F.greatest(F.size("half_in") - 1, F.lit(0)))
-    )
-    geom_str = F.concat(
-        F.lit("LINESTRING("),
-        F.concat_ws(
-            ";",
-            F.transform(
-                line,
-                lambda p: F.concat_ws(
-                    " ",
-                    F.format_number(p["lng"], 6),
-                    F.format_number(p["lat"], 6),
-                ),
-            ),
-        ),
-        F.lit(")"),
-    )
-    src_mid = F.element_at(F.col("half_out"), 1)
-    tgt_mid = F.element_at(F.col("half_in"), -1)
-    return joined.select(
-        F.col("cost").alias("weight"),
-        geom_str.alias("geom"),
-        F.col("src_oneway").cast("int").alias("was_one_way"),
-        F.col("from_way").alias("osm_way_from"),
-        F.col("to_way").alias("osm_way_to"),
+    line = "concat(half_out, slice(half_in, 2, greatest(size(half_in) - 1, 0)))"
+    point = "concat_ws(' ', format_number(__p.lng, 6), format_number(__p.lat, 6))"
+    points = f"transform({line}, __p -> {point})"
+    return joined.selectExpr(
+        "cost AS weight",
+        f"concat('LINESTRING(', concat_ws(';', {points}), ')') AS geom",
+        "CAST(src_oneway AS INT) AS was_one_way",
+        "from_way AS osm_way_from",
+        "to_way AS osm_way_to",
         "from_source_node",
         "from_target_node",
         "to_source_node",
         "to_target_node",
-        src_mid["lat"].alias("src_mid_lat"),
-        src_mid["lng"].alias("src_mid_lng"),
-        tgt_mid["lat"].alias("tgt_mid_lat"),
-        tgt_mid["lng"].alias("tgt_mid_lng"),
+        "element_at(half_out, 1).lat AS src_mid_lat",
+        "element_at(half_out, 1).lng AS src_mid_lng",
+        "element_at(half_in, -1).lat AS tgt_mid_lat",
+        "element_at(half_in, -1).lng AS tgt_mid_lng",
     )
 
 
@@ -229,7 +129,8 @@ REFERENCE_CSV_COLUMNS = [
 ]
 
 
-def write_csv(edges: DataFrame, exp_edges: DataFrame, path: str) -> None:
-    export_rows(edges, exp_edges).select(*REFERENCE_CSV_COLUMNS).write.mode(
-        "overwrite"
-    ).option("header", True).csv(path)
+def write_csv(rows: DataFrame, path: str) -> None:
+    """Write :func:`export_rows` output as the reference's CSV file."""
+    rows.select(*REFERENCE_CSV_COLUMNS).write.mode("overwrite").option(
+        "header", True
+    ).csv(path)

@@ -184,26 +184,6 @@ def build_edges(
     )
 
 
-def edge_tile_assignment(edges: DataFrame, res: int) -> DataFrame:
-    """Edge → every tile cell its GEOMETRY passes through, via supercover
-    rasterization (:func:`operators.spatial_join.polyline_to_cells`).
-
-    The reference lays each edge into per-pixel files before turn
-    inversion (reference main.cpp:587-708) keyed by the edge's ENDPOINT
-    pixels; this is the stronger geometric version — an edge whose
-    polyline cuts a corner of a third cell lands there too, which is
-    what a tile-local renderer or map-matcher actually needs.  Pure
-    codegen, (edge_id, cell) unique per row, no shuffle.
-    """
-    from navgraph_osm_spark.operators.spatial_join import polyline_to_cells
-
-    return polyline_to_cells(
-        edges.select("edge_id", F.col("geom").alias("geometry")),
-        res,
-        line_id="edge_id",
-    )
-
-
 def construction_counts(
     nodes: DataFrame, ways: DataFrame, way_nodes: DataFrame, edges: DataFrame
 ) -> DataFrame:

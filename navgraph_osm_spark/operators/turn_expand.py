@@ -89,9 +89,9 @@ def expand_turns(
     # deliberate SHUFFLE_HASH for the shuffled self-join (guide §3.1): the
     # per-partition build side is bounded by the shuffle, and sort-merge
     # paid two full sorts of the edge relation for an output nobody
-    # consumes sorted.  The cobucketed variant passes unhinted sides —
-    # there the bucket-sorted scans make the exchange-free sort-merge the
-    # right plan and a hash hint would reintroduce work.
+    # consumes sorted.  Bucketed side tables (bench.py --turns) are joined
+    # unhinted — there the bucket-sorted scans make the exchange-free
+    # sort-merge the right plan and a hash hint would reintroduce work.
     return _expand_from_sides(a, b.hint("shuffle_hash"), restrictions, strict_only)
 
 
@@ -121,36 +121,6 @@ def turn_sides(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
         F.col("tgt_lng").alias("b_tgt_lng"),
     )
     return a, b
-
-
-def expand_turns_cobucketed(
-    writer,
-    edges: DataFrame,
-    restrictions: DataFrame,
-    n_buckets: int = 64,
-    strict_only: bool = False,
-) -> DataFrame:
-    """Turn expansion over WRITE-TIME BUCKETED side tables: both join sides
-    are materialized bucketed + bucket-sorted on (via_cell, via_node), so
-    the J4-J6 self-join plans with ZERO Exchange nodes — the read is
-    already co-partitioned.  This is the 100 TB shape: the shuffle is paid
-    once at write time (and amortized across every downstream consumer /
-    resume), exactly like the reference laying out per-pixel edge files
-    before EP3 (reference main.cpp:587-708 → 918).
-
-    ``writer`` is a sources.tables.TableWriter; the side tables land in its
-    warehouse as ``turn_side_a`` / ``turn_side_b``.
-    """
-    a, b = turn_sides(edges)
-    keys = ["via_cell", "via_node"]
-    writer.write_bucketed(a, "turn_side_a", keys, n_buckets, sort_cols=keys)
-    writer.write_bucketed(b, "turn_side_b", keys, n_buckets, sort_cols=keys)
-    return _expand_from_sides(
-        writer.read_bucketed("turn_side_a"),
-        writer.read_bucketed("turn_side_b"),
-        restrictions,
-        strict_only,
-    )
 
 
 def _expand_from_sides(

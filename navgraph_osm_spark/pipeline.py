@@ -29,16 +29,11 @@ def build_pipeline(
     restrictions: DataFrame,
     res: int = 12,
     strict_turns: bool = False,
-    bucketed_turns: bool = False,
-    n_buckets: int = 64,
 ) -> StageRunner:
     """Assemble the 4-stage graph pipeline; call ``.run(resume=True)``.
 
     ``strict_turns`` switches only_* handling to the reference's first-match
-    semantics (turn_expand.expand_turns strict_only).  ``bucketed_turns``
-    materializes the turn-join sides as bucketed tables so the J4-J6
-    self-join runs exchange-free (expand_turns_cobucketed) — pay the
-    shuffle once at write time, the 100 TB default.
+    semantics (turn_expand.expand_turns strict_only).
     """
     runner = StageRunner(spark, warehouse)
 
@@ -49,18 +44,6 @@ def build_pipeline(
         return df.withColumn("part_cell", F.shiftright(F.col("src_cell"), 8))
 
     def st_turns(deps):
-        if bucketed_turns:
-            from navgraph_osm_spark.operators.turn_expand import (
-                expand_turns_cobucketed,
-            )
-
-            return expand_turns_cobucketed(
-                runner.writer,
-                deps["edges"].drop("part_cell"),
-                restrictions,
-                n_buckets=n_buckets,
-                strict_only=strict_turns,
-            )
         return expand_turns(deps["edges"], restrictions, strict_only=strict_turns)
 
     def st_export(deps):
@@ -94,7 +77,6 @@ def run_full_pipeline(
     res: int = 12,
     resume: bool = True,
     strict_turns: bool = False,
-    bucketed_turns: bool = False,
 ) -> dict[str, DataFrame]:
     runner = build_pipeline(
         spark,
@@ -105,6 +87,5 @@ def run_full_pipeline(
         tables["restrictions"],
         res=res,
         strict_turns=strict_turns,
-        bucketed_turns=bucketed_turns,
     )
     return runner.run(resume=resume)

@@ -1861,10 +1861,10 @@ def _export_edges(spark, sf_dir):
     wn = t["way_nodes"].filter(F.col("way_id") % 20 == 0)
     ways = t["ways"].filter(F.col("id") % 20 == 0)
     edges = graph_build.build_edges(t["nodes"], ways, wn, res=6)
-    # export fans the edge relation into 6+ consumers (halves kernel, src/tgt
-    # struct joins, the turn join's two sides, J7); checkpoint it once — the
-    # Spark analogue of the reference writing edge files before export
-    # (reference main.cpp:587-708 → csv/generate.hpp)
+    # export fans the edge relation into 6+ consumers (halves projection,
+    # src/tgt struct joins, the turn join's two sides, J7); checkpoint it
+    # once — the Spark analogue of the reference writing edge files before
+    # export (reference main.cpp:587-708 → csv/generate.hpp)
     edges = edges.localCheckpoint(eager=True)
     restrictions = spark.createDataFrame(
         [], "id long, from_way long, via_node long, to_way long, type int"

@@ -237,29 +237,6 @@ def decode_stats_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
         )
 
 
-RESIZE_SCHEMA = "image_id string, thumb binary, tw int, th int"
-
-
-def resize_batches(size: int = 8):
-    """mapInPandas kernel factory: decode → block-mean thumbnail → re-encode raw."""
-
-    def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for img_id, data in zip(pdf["image_id"], pdf["bytes"]):
-                arr = decode_image(bytes(data))
-                thumb = np.stack(
-                    [_resize_block_mean(arr[..., c].astype(np.float64), size) for c in range(3)],
-                    axis=-1,
-                ).clip(0, 255).astype(np.uint8)
-                rows.append(
-                    {"image_id": img_id, "thumb": thumb.tobytes(), "tw": size, "th": size}
-                )
-            yield pd.DataFrame(rows, columns=["image_id", "thumb", "tw", "th"])
-
-    return _kernel
-
-
 EMBED_SCHEMA = "image_id string, embedding array<float>"
 
 

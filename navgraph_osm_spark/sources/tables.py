@@ -51,15 +51,6 @@ def spread_scan(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in DRIVER_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in DRIVER_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def iceberg_available(spark: SparkSession) -> bool:
     try:
         jvm = spark.sparkContext._jvm  # noqa: SLF001

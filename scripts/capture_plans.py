@@ -3,11 +3,14 @@
 
 Usage::
 
-    python scripts/capture_plans.py [--baseline DIR] [--out-dir DIR] <suffix> [query ...]
+    python scripts/capture_plans.py [--baseline DIR] [--out-dir DIR] [<suffix>] [query ...]
+    python scripts/capture_plans.py [--baseline DIR] all
 
-Writes ``<out-dir>/<query>_<suffix>.txt`` (default ``plans/r06``) for each
-named query (default: the bench headline set; ``all`` = every registered
-query).  The default mode writes ``.explain("formatted")``.
+Writes ``<out-dir>/<query>_<suffix>.txt`` (default: a new temporary
+directory, printed; pass ``--out-dir plans/r06`` to refresh the tracked
+captures) for each named query (default: the bench headline set; ``all`` =
+every registered query, also as the only argument).  The default mode
+writes ``.explain("formatted")``.
 
 ``--baseline DIR`` checks that a refactor left the plans identical.  It
 builds every query from the checkout at ``DIR`` (e.g. ``git archive`` of the
@@ -30,6 +33,7 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -65,10 +69,14 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--baseline", metavar="DIR",
                     help="compare canonical plans against the checkout in DIR")
-    ap.add_argument("--out-dir", default=os.path.join(REPO, "plans", "r06"))
+    ap.add_argument("--out-dir")
     ap.add_argument("suffix", nargs="?", default="before")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
+    if args.suffix == "all" and not args.names:
+        args.suffix, args.names = ap.get_default("suffix"), ["all"]
+    out_dir = args.out_dir or tempfile.mkdtemp(prefix="capture_plans_")
+    print(f"plans in {out_dir}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
@@ -87,7 +95,7 @@ def main() -> None:
     if args.baseline:
         baseline = {n: canonical_plan(qs[n](spark, sf_dir)) for n in names if n in qs}
         qs = _import_queries(REPO).queries()
-    os.makedirs(args.out_dir, exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
     differ = []
     for name in names:
         df = qs[name](spark, sf_dir)
@@ -99,13 +107,13 @@ def main() -> None:
                     "formatted"
                 )
             )
-        path = os.path.join(args.out_dir, f"{name}_{args.suffix}.txt")
+        path = os.path.join(out_dir, f"{name}_{args.suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)
         if not args.baseline:
             print(f"wrote {path} ({plan.count('Exchange')} Exchange)")
             continue
-        with open(os.path.join(args.out_dir, f"{name}_baseline.txt"), "w") as f:
+        with open(os.path.join(out_dir, f"{name}_baseline.txt"), "w") as f:
             f.write(baseline.get(name, "(query absent from the baseline)\n"))
         same = baseline.get(name) == plan
         print(f"{name}: {'identical' if same else 'DIFFERENT'}")

@@ -6,7 +6,7 @@ Usage (real cluster; the module zip ships with the job)::
     python -m zipfile -c navgraph_osm_spark.zip navgraph_osm_spark
     spark-submit --master <cluster> --py-files navgraph_osm_spark.zip \
         submit.py <input.osm.pbf | input_dir | --demo-grid RxC> [output_csv] \
-        [--warehouse DIR] [--res N] [--bucketed-turns] [--strict-turns]
+        [--warehouse DIR] [--res N] [--strict-turns]
 
 The session comes from spark-submit (master, executor counts, memory);
 this driver only applies the engine's SQL configs and runs the same

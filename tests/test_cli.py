@@ -95,25 +95,14 @@ def test_cli_pbf_input(spark, tmp_path):
     assert header.startswith("weight,geom,was_one_way,osm_way_from")
 
 
-def test_cli_demo_grid_bucketed_strict(spark, tmp_path):
-    """--bucketed-turns (exchange-free J4-J6 via bucketed side tables) must
-    reproduce the default path exactly; --strict-turns (reference
-    first-match only_*) may only ever REMOVE expanded edges — the demo
-    grid's only_* mandate onto a bidirectional way loses exactly the
-    non-first matches."""
+def test_cli_demo_grid_strict(spark, tmp_path):
+    """--strict-turns (reference first-match only_*) may only ever REMOVE
+    expanded edges — the demo grid's only_* mandate onto a bidirectional
+    way loses exactly the non-first matches."""
     base = main(
         ["--demo-grid", "4x4", "--warehouse", str(tmp_path / "whA"), "--res", "10"],
         spark=spark,
     )
-    bucketed = main(
-        [
-            "--demo-grid", "4x4", "--warehouse", str(tmp_path / "whB"),
-            "--res", "10", "--bucketed-turns",
-        ],
-        spark=spark,
-    )
-    assert bucketed["edges_emitted"] == base["edges_emitted"]
-    assert bucketed["expanded_edges"] == base["expanded_edges"]
     strict = main(
         [
             "--demo-grid", "4x4", "--warehouse", str(tmp_path / "whC"),

@@ -4,10 +4,11 @@ from __future__ import annotations
 
 import re
 
+import numpy as np
 import pytest
 
 from navgraph_osm_spark.functions.geo import find_middle_point_np
-from navgraph_osm_spark.operators.export import export_rows, write_csv
+from navgraph_osm_spark.operators.export import export_rows, halves_expr, write_csv
 from navgraph_osm_spark.operators.graph_build import build_edges
 from navgraph_osm_spark.operators.turn_expand import expand_turns
 from navgraph_osm_spark.sources.synth import gen_road_grid
@@ -59,22 +60,34 @@ def test_geom_starts_at_source_midpoint(graph):
 
 def test_write_csv(tmp_path, graph):
     edges, turns = graph
-    write_csv(edges, turns, str(tmp_path / "out"))
+    write_csv(export_rows(edges, turns), str(tmp_path / "out"))
     import glob
 
     files = glob.glob(str(tmp_path / "out" / "*.csv"))
     assert files
 
 
-def test_halves_kernel_vectorized_matches_scalar():
-    """The Arrow-offset vectorized halves kernel reproduces the scalar
-    reference semantics (midpoint + split index) on random polylines,
-    including the degenerate zero-length and 2-point cases."""
-    import numpy as np
-    import pyarrow as pa
+def _sql_halves(spark, edges):
+    """Run :func:`halves_expr` over ``(edge_id, lats, lngs)`` rows →
+    {edge_id: (half_out, half_in)} as lists of (lat, lng) tuples."""
+    df = spark.createDataFrame(
+        [(e, [(float(a), float(b)) for a, b in zip(la, ln)]) for e, la, ln in edges],
+        "edge_id long, geom array<struct<lat:double,lng:double>>",
+    )
+    rows = df.selectExpr("edge_id", f"{halves_expr('geom')} AS h").collect()
+    return {
+        r["edge_id"]: (
+            [(p["lat"], p["lng"]) for p in r["h"]["half_out"]],
+            [(p["lat"], p["lng"]) for p in r["h"]["half_in"]],
+        )
+        for r in rows
+    }
 
-    from navgraph_osm_spark.operators.export import _halves_kernel
 
+def test_halves_kernel_vectorized_matches_scalar(spark):
+    """The SQL halves reproduce the scalar reference semantics (midpoint +
+    split index) bit for bit on random polylines, including the degenerate
+    zero-length, 2-point and 1-point cases."""
     rng = np.random.default_rng(11)
     edges = []
     for e in range(300):
@@ -85,106 +98,47 @@ def test_halves_kernel_vectorized_matches_scalar():
     # symmetric polyline: half lands EXACTLY on the middle vertex — the
     # split-index equality case must match the sequential-cumsum oracle
     edges.append((9003, np.array([0.0, 1.0, 2.0]), np.array([0.0, 1.0, 2.0])))
+    edges.append((9004, np.array([7.0]), np.array([8.0])))
+    got = _sql_halves(spark, edges)
 
-    struct = pa.StructArray.from_arrays(
-        [pa.array(np.concatenate([e[1] for e in edges])),
-         pa.array(np.concatenate([e[2] for e in edges]))],
-        ["lat", "lng"],
-    )
-    offs = np.concatenate(([0], np.cumsum([len(e[1]) for e in edges]))).astype(np.int32)
-    geom = pa.ListArray.from_arrays(pa.array(offs, pa.int32()), struct)
-    rb = pa.RecordBatch.from_arrays(
-        [pa.array([e[0] for e in edges], pa.int64()), geom], ["edge_id", "geom"]
-    )
-    out = list(_halves_kernel(iter([rb])))[0]
-    ho, hi = out.column(1).to_pylist(), out.column(2).to_pylist()
-
-    for idx, (eid, lats, lngs) in enumerate(edges):
-        # scalar reference: sequential per-edge cumsum (the SQL oracle's
-        # association order), one half for both split and midpoint
-        legs = np.hypot(np.diff(lats), np.diff(lngs))
+    for eid, lats, lngs in edges:
+        # scalar reference: the SQL leg formula and a sequential per-edge
+        # cumsum (the SQL oracle's association order), one half for both
+        # split and midpoint
+        dlat, dlng = np.diff(lats), np.diff(lngs)
+        legs = np.sqrt(dlat * dlat + dlng * dlng)
         cum = np.concatenate(([0.0], np.cumsum(legs)))
         half = cum[-1] / 2.0
         split = int(np.searchsorted(cum, half, side="right"))
-        i0 = min(split - 1, legs.size - 1)
-        if cum[-1] == 0.0:
-            i0 = 0
-        frac = (half - cum[i0]) / legs[i0] if legs[i0] > 0 else 0.0
-        mid = (lats[i0] + (lats[i0 + 1] - lats[i0]) * frac,
-               lngs[i0] + (lngs[i0 + 1] - lngs[i0]) * frac)
+        if lats.size == 1:
+            mid = (lats[0], lngs[0])
+        else:
+            i0 = 0 if cum[-1] == 0.0 else min(split - 1, legs.size - 1)
+            frac = (half - cum[i0]) / legs[i0] if legs[i0] > 0 else 0.0
+            mid = (lats[i0] + (lats[i0 + 1] - lats[i0]) * frac,
+                   lngs[i0] + (lngs[i0 + 1] - lngs[i0]) * frac)
         pts = list(zip(lats, lngs))
         want_out = [mid] + pts[split:]
         want_in = pts[:split] + [mid]
-        got_out = [(p["lat"], p["lng"]) for p in ho[idx]]
-        got_in = [(p["lat"], p["lng"]) for p in hi[idx]]
+        got_out, got_in = got[eid]
         assert got_out == [(float(a), float(b)) for a, b in want_out], eid
         assert got_in == [(float(a), float(b)) for a, b in want_in], eid
 
 
-def test_halves_kernel_split_equality_case():
+def test_halves_kernel_split_equality_case(spark):
     """Half exactly equal to a vertex offset: the vertex belongs to half_in
     (searchsorted side='right' semantics), bit-for-bit."""
-    import numpy as np
-    import pyarrow as pa
-
-    from navgraph_osm_spark.operators.export import _halves_kernel
-
     lats, lngs = np.array([0.0, 3.0, 6.0]), np.array([0.0, 4.0, 8.0])  # legs 5,5
-    struct = pa.StructArray.from_arrays([pa.array(lats), pa.array(lngs)], ["lat", "lng"])
-    geom = pa.ListArray.from_arrays(
-        pa.array(np.array([0, 3], np.int32), pa.int32()), struct
-    )
-    rb = pa.RecordBatch.from_arrays(
-        [pa.array([1], pa.int64()), geom], ["edge_id", "geom"]
-    )
-    out = list(_halves_kernel(iter([rb])))[0]
-    ho, hi = out.column(1).to_pylist()[0], out.column(2).to_pylist()[0]
+    ho, hi = _sql_halves(spark, [(1, lats, lngs)])[1]
     # half == 5.0 == cum[1] exactly → split=2 → mid is the middle vertex
-    assert [(p["lat"], p["lng"]) for p in hi] == [(0.0, 0.0), (3.0, 4.0), (3.0, 4.0)]
-    assert [(p["lat"], p["lng"]) for p in ho] == [(3.0, 4.0), (6.0, 8.0)]
+    assert hi == [(0.0, 0.0), (3.0, 4.0), (3.0, 4.0)]
+    assert ho == [(3.0, 4.0), (6.0, 8.0)]
 
 
-def test_halves_kernel_mixed_degenerate_batch_bit_exact():
-    """A degenerate (<2-point) geometry in a batch must NOT change any
-    ordinary edge's arithmetic: normal rows still take the vector path, so
-    their midpoints are bitwise identical to an all-normal batch (batch
-    composition independence)."""
-    import numpy as np
-    import pyarrow as pa
-
-    from navgraph_osm_spark.operators.export import _halves_kernel
-
-    rng = np.random.default_rng(23)
-    edges = [
-        (e, rng.uniform(-80, 80, int(rng.integers(2, 9))), None) for e in range(40)
-    ]
-    edges = [(e, la, rng.uniform(-179, 179, la.size)) for e, la, _ in edges]
-
-    def _batch(rows):
-        struct = pa.StructArray.from_arrays(
-            [pa.array(np.concatenate([r[1] for r in rows])),
-             pa.array(np.concatenate([r[2] for r in rows]))],
-            ["lat", "lng"],
-        )
-        offs = np.concatenate(([0], np.cumsum([len(r[1]) for r in rows]))).astype(np.int32)
-        geom = pa.ListArray.from_arrays(pa.array(offs, pa.int32()), struct)
-        return pa.RecordBatch.from_arrays(
-            [pa.array([r[0] for r in rows], pa.int64()), geom], ["edge_id", "geom"]
-        )
-
-    def _collect(batches):
-        got = {}
-        for rb in batches:
-            for i, eid in enumerate(rb.column(0).to_pylist()):
-                got[eid] = (rb.column(1).to_pylist()[i], rb.column(2).to_pylist()[i])
-        return got
-
-    pure = _collect(_halves_kernel(iter([_batch(edges)])))
-    degenerate = (999, np.array([7.0]), np.array([8.0]))
-    mixed = _collect(
-        _halves_kernel(iter([_batch(edges[:20] + [degenerate] + edges[20:])]))
-    )
-    for e, _la, _ln in edges:
-        assert mixed[e] == pure[e], e  # bitwise: dict equality on floats
-    # the degenerate row itself survives via the fallback
-    assert len(mixed[999][0]) >= 1 and len(mixed[999][1]) >= 1
+def test_export_rows_runs_no_python(graph):
+    """The whole export — halves, joins, LINESTRING assembly — plans as
+    JVM operators: no Python node anywhere in it."""
+    edges, turns = graph
+    plan = export_rows(edges, turns)._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInArrow", "ArrowEvalPython", "BatchEvalPython", "PythonUDF"):
+        assert node not in plan, plan

@@ -6,7 +6,6 @@ crossing shared by one horizontal + one vertical way ⇒ used ≥ 2 ⇒ split.
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -109,35 +108,3 @@ def test_geom_endpoints_and_cells(edges):
     non_border = pdf[~pdf["is_border"]]
     assert (border["src_cell"] != border["tgt_cell"]).all()
     assert (non_border["src_cell"] == non_border["tgt_cell"]).all()
-
-
-def test_edge_tile_assignment_supercover(edges):
-    """Every edge's tile set contains its endpoint cells (the reference's
-    per-pixel layout keys) plus every cell its geometry passes through
-    (sampled oracle); pairs unique; pure codegen plan."""
-    from navgraph_osm_spark import cells
-    from navgraph_osm_spark.operators.graph_build import edge_tile_assignment
-
-    res = 12
-    out = edge_tile_assignment(edges, res)
-    rows = out.collect()
-    tiles: dict[int, set] = {}
-    for r in rows:
-        tiles.setdefault(r["edge_id"], set()).add(r["cell"])
-    assert len(rows) == sum(len(v) for v in tiles.values())
-
-    sample = edges.select("edge_id", "src_cell", "tgt_cell", "geom").limit(40).collect()
-    for e in sample:
-        cset = tiles[e["edge_id"]]
-        assert e["src_cell"] in cset and e["tgt_cell"] in cset, e["edge_id"]
-        lat = np.array([p["lat"] for p in e["geom"]])
-        lng = np.array([p["lng"] for p in e["geom"]])
-        for i in range(lat.size - 1):
-            t = np.linspace(0, 1, 200)
-            cc = cells.latlng_to_cell(
-                lat[i] + t * (lat[i + 1] - lat[i]),
-                lng[i] + t * (lng[i + 1] - lng[i]), res)
-            assert set(int(c) for c in cc) <= cset, e["edge_id"]
-
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan and "MapInPandas" not in plan

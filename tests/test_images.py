@@ -1,5 +1,5 @@
 """Image table: codec invariants (PSNR, caption byte-equality, phash),
-Arrow plumbing (decode/resize via mapInPandas), generator determinism."""
+Arrow plumbing (decode via mapInPandas), generator determinism."""
 
 from __future__ import annotations
 
@@ -72,14 +72,6 @@ def test_decode_stats_operator(images):
     assert stats["phash_ok"].all()
     assert (stats[["mean_r", "mean_g", "mean_b"]].to_numpy() >= 0).all()
     assert (stats[["mean_r", "mean_g", "mean_b"]].to_numpy() <= 255).all()
-
-
-def test_resize_operator(images):
-    thumbs = images.mapInPandas(codec.resize_batches(8), schema=codec.RESIZE_SCHEMA).toPandas()
-    assert len(thumbs) == N
-    for _, row in thumbs.head(10).iterrows():
-        arr = np.frombuffer(row["thumb"], dtype=np.uint8).reshape(8, 8, 3)
-        assert arr.min() >= 0 and arr.max() <= 255
 
 
 def test_skewed_distribution(images):

@@ -13,6 +13,7 @@ import py4j.clientserver
 import py4j.protocol
 import pytest
 
+from navgraph_osm_spark.operators.export import export_rows
 from navgraph_osm_spark.operators.graph_build import build_edges
 from navgraph_osm_spark.operators.knn import distance_join
 from navgraph_osm_spark.operators.spatial_join import (
@@ -30,6 +31,7 @@ BOUNDS = {
     "tile_assignment": 2 * 73,
     "distance_join": 2 * 46,
     "build_edges": 2 * 220,
+    "export_rows": 2 * 88,
 }
 
 
@@ -45,11 +47,20 @@ def builders(spark):
         [(1, {"highway": "primary"})], "id long, tags map<string,string>"
     )
     way_nodes = spark.createDataFrame([(1, 0, 1)], "way_id long, seq int, node_id long")
+    edges = spark.createDataFrame(
+        [(1, TRIANGLE, False, 1, 2)],
+        f"edge_id long, geom {FP}, oneway boolean, src_node long, tgt_node long",
+    )
+    turns = spark.createDataFrame(
+        [(1, 1, 1.0, 1, 1)],
+        "src_edge_id long, tgt_edge_id long, cost double, from_way long, to_way long",
+    )
     return {
         "point_in_polygon_join": lambda: point_in_polygon_join(pts, polys, res=6),
         "tile_assignment": lambda: tile_assignment(images, 8),
         "distance_join": lambda: distance_join(left, right, 5.0, res=8),
         "build_edges": lambda: build_edges(nodes, ways, way_nodes, res=12),
+        "export_rows": lambda: export_rows(edges, turns),
     }
 
 
@@ -57,8 +68,8 @@ def builders(spark):
 def test_plan_build_round_trips_bounded(builders, monkeypatch, name):
     """Round trips of the Column-API builders these bounds replaced: on the
     headline frames point_in_polygon_join 9,395, tile_assignment 901 and
-    distance_join 1,905; on this module's frames 7,549, 900, 1,904 and
-    build_edges 3,077."""
+    distance_join 1,905; on this module's frames 7,549, 900, 1,904,
+    build_edges 3,077 and export_rows 751."""
     build = builders[name]
     build()  # warm: first use of a JVM function resolves and caches it
     calls = [0]

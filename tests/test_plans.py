@@ -124,14 +124,15 @@ def test_adaptive_split_single_data_aggregation(spark):
 
 
 def test_cobucketed_turn_join_no_exchange(spark, tmp_path):
-    """expand_turns_cobucketed: both sides written bucketed+sorted on
-    (via_cell, via_node) → the J4-J6 self-join reads pre-partitioned and
-    plans with NO Exchange between the join and the bucketed scans (the
-    shuffle is paid once at write time — the 100 TB shape)."""
+    """bench.py --turns' bucketed composition: both turn sides written
+    bucketed+sorted on (via_cell, via_node) → the J4-J6 self-join reads
+    pre-partitioned and plans with NO Exchange between the join and the
+    bucketed scans (the shuffle is paid once at write time)."""
     from navgraph_osm_spark.operators import graph_build
     from navgraph_osm_spark.operators.turn_expand import (
+        _expand_from_sides,
         expand_turns,
-        expand_turns_cobucketed,
+        turn_sides,
     )
     from navgraph_osm_spark.sources.tables import TableWriter
 
@@ -149,7 +150,16 @@ def test_cobucketed_turn_join_no_exchange(spark, tmp_path):
             [], "id long, from_way long, via_node long, to_way long, type int"
         )
         writer = TableWriter(spark, str(tmp_path / "wh"))
-        out = expand_turns_cobucketed(writer, edges, restrictions, n_buckets=8)
+        keys = ["via_cell", "via_node"]
+        a, b = turn_sides(edges)
+        writer.write_bucketed(a, "turn_side_a", keys, 8, sort_cols=keys)
+        writer.write_bucketed(b, "turn_side_b", keys, 8, sort_cols=keys)
+        out = _expand_from_sides(
+            writer.read_bucketed("turn_side_a"),
+            writer.read_bucketed("turn_side_b"),
+            restrictions,
+            strict_only=False,
+        )
         plan = plan_of(out)
         # walk the join subtree: from the SortMergeJoin down to its two
         # bucketed scans there must be no Exchange (only Sort/Filter)
