@@ -125,6 +125,26 @@ def test_halves_kernel_vectorized_matches_scalar(spark):
         assert got_in == [(float(a), float(b)) for a, b in want_in], eid
 
 
+def test_halves_kernel_mixed_degenerate_batch_bit_exact(spark):
+    """A degenerate (1-point) geometry among ordinary rows must NOT change
+    any ordinary edge's arithmetic: their halves are bitwise identical to an
+    all-ordinary input (row-composition independence), and the degenerate
+    row itself still yields non-empty halves."""
+    rng = np.random.default_rng(23)
+    edges = []
+    for e in range(40):
+        la = rng.uniform(-80, 80, int(rng.integers(2, 9)))
+        edges.append((e, la, rng.uniform(-179, 179, la.size)))
+
+    pure = _sql_halves(spark, edges)
+    degenerate = (999, np.array([7.0]), np.array([8.0]))
+    mixed = _sql_halves(spark, edges[:20] + [degenerate] + edges[20:])
+    for e, _la, _ln in edges:
+        assert mixed[e] == pure[e], e  # bitwise: equality on floats
+    # scalar reference for one point: split=1 → out=[mid], in=[p, mid]
+    assert mixed[999] == ([(7.0, 8.0)], [(7.0, 8.0), (7.0, 8.0)])
+
+
 def test_halves_kernel_split_equality_case(spark):
     """Half exactly equal to a vertex offset: the vertex belongs to half_in
     (searchsorted side='right' semantics), bit-for-bit."""
