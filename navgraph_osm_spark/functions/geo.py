@@ -11,8 +11,6 @@ Spark SQL-text implementations of the reference's scalar geometry library
 - ``polyline_cost_expr`` ↔ ``wayCost`` (geomath.cpp:23-46) via the
   ``aggregate`` higher-order function over an inline geometry array.
 - numpy versions (suffix ``_np``) for pandas-UDF composition and tests.
-- ``find_middle_point_np`` ↔ ``findMiddlePoint`` (geomath.cpp:77-97):
-  point at half the *Euclidean* polyline length by linear interpolation.
 - ``points_in_polygon_np`` — vectorized ray-casting point-in-polygon
   (the PIP join's test oracle and the overlay kernel's containment test;
   the reference has no polygon ops — this is graft functionality per
@@ -73,32 +71,6 @@ def polyline_cost_expr(geom: str) -> str:
 # ---------------------------------------------------------------------------
 # numpy geometry kernels (used inside Arrow-batched pandas UDFs and tests)
 # ---------------------------------------------------------------------------
-
-def polyline_euclidean_lengths_np(lats: np.ndarray, lngs: np.ndarray) -> np.ndarray:
-    """Per-leg planar lengths (reference findDistance, geomath.cpp:48-53)."""
-    return np.hypot(np.diff(lats), np.diff(lngs))
-
-
-def find_middle_point_np(lats: np.ndarray, lngs: np.ndarray) -> tuple[float, float]:
-    """Point at half the Euclidean polyline length (geomath.cpp:77-97)."""
-    lats = np.asarray(lats, dtype=np.float64)
-    lngs = np.asarray(lngs, dtype=np.float64)
-    if lats.size == 1:
-        return float(lats[0]), float(lngs[0])
-    legs = polyline_euclidean_lengths_np(lats, lngs)
-    total = legs.sum()
-    if total == 0.0:
-        return float(lats[0]), float(lngs[0])
-    half = total / 2.0
-    cum = np.concatenate(([0.0], np.cumsum(legs)))
-    i = int(np.searchsorted(cum, half, side="right") - 1)
-    i = min(i, legs.size - 1)
-    frac = (half - cum[i]) / legs[i] if legs[i] > 0 else 0.0
-    return (
-        float(lats[i] + (lats[i + 1] - lats[i]) * frac),
-        float(lngs[i] + (lngs[i + 1] - lngs[i]) * frac),
-    )
-
 
 def _orient_np(ax, ay, bx, by, cx, cy):
     """Sign of the cross product (b-a) × (c-a), broadcastable."""

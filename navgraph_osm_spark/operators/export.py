@@ -12,8 +12,9 @@ where ``geom`` is ``LINESTRING(lon lat;lon lat;…)`` (';'-separated,
 node → midpoint(target edge) (reference generate.hpp:187-216, midpoints
 geomath.cpp:77-97).
 
-J10's offset joins become two DataFrame joins on edge id; the geometry
-midpoint and the two half-polylines are one Spark SQL expression
+J10's offset joins become two DataFrame joins on edge id (one per side, each
+side computing only its half); the geometry midpoint and the two
+half-polylines are one Spark SQL expression
 (:func:`halves_expr`: ``zip_with`` legs, ``aggregate`` folds, ``slice``/
 ``concat``) and the string assembly is ``format_number``/``concat_ws``, so
 the export runs no Python; every projection is Spark SQL text.
@@ -87,16 +88,16 @@ def halves_expr(geom: str) -> str:
 
 def export_rows(edges: DataFrame, exp_edges: DataFrame) -> DataFrame:
     """Expanded edges joined to edge geometry, with formatted LINESTRING."""
-    halves = edges.selectExpr("edge_id", f"{halves_expr('geom')} AS h").selectExpr(
-        "edge_id", "h.half_out", "h.half_in"
-    )
+    halves = halves_expr("geom")
     src = edges.selectExpr(
         "edge_id AS src_edge_id", "oneway AS src_oneway",
         "src_node AS from_source_node", "tgt_node AS from_target_node",
-    ).join(halves.selectExpr("edge_id AS src_edge_id", "half_out"), "src_edge_id")
+        f"{halves}.half_out AS half_out",
+    )
     tgt = edges.selectExpr(
         "edge_id AS tgt_edge_id", "src_node AS to_source_node", "tgt_node AS to_target_node",
-    ).join(halves.selectExpr("edge_id AS tgt_edge_id", "half_in"), "tgt_edge_id")
+        f"{halves}.half_in AS half_in",
+    )
 
     joined = exp_edges.join(src, "src_edge_id").join(tgt, "tgt_edge_id")
     # geometry: midpoint(src)…via…midpoint(tgt); drop the duplicated via point

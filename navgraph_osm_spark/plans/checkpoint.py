@@ -9,7 +9,9 @@ per-partition-column counts, input fingerprints, wall time.  The counts
 are read from the written files' metadata (parquet footers per hive
 partition directory, or the Iceberg snapshot summary) — no count job.  ``run()``
 skips stages whose output already exists and validates — that is the
-north_rule's checkpoint-resume.
+north_rule's checkpoint-resume.  The unit of resume is the whole stage: a
+stage is either skipped or rerun and overwritten in full; the
+per-partition counts are lineage and metrics, not a unit of recompute.
 
 Resume validation is METADATA-ONLY (no Spark jobs, no full-table scans):
 
@@ -98,47 +100,14 @@ def table_fingerprint(writer: TableWriter, name: str) -> str:
     return "files:" + _md5(json.dumps(sorted(entries)))
 
 
-def partition_dir_fingerprints(path: str, col: str) -> dict[str, str]:
-    """Per-partition content fingerprints of a hive-partitioned parquet
-    directory: ``{value: md5(relative file list + sizes)}`` for each
-    ``<col>=<value>`` subdirectory.  Metadata-only (no Spark job) — the
-    unit of change detection for partition-level incremental resume.
-
-    Keys are the UNESCAPED partition values (hive percent-encodes special
-    chars — space, ':', '=' — into directory names; Spark lineage rows and
-    ``F.col(col).cast("string")`` comparisons see the raw value, so the
-    escaped directory name must be decoded before any matching).  Null
-    partitions (``__HIVE_DEFAULT_PARTITION__``) are excluded — a null
-    partition value never round-trips through string matching, so such
-    partitions always fall back to full recompute."""
-    out: dict[str, str] = {}
-    prefix = f"{col}="
-    if not os.path.isdir(path):
-        return out
-    for d in sorted(os.listdir(path)):
-        full = os.path.join(path, d)
-        if not (d.startswith(prefix) and os.path.isdir(full)):
-            continue
-        value = _unescape_hive(d[len(prefix):])
-        if value == "__HIVE_DEFAULT_PARTITION__":
-            continue
-        entries = []
-        for root, _dirs, files in os.walk(full):
-            for f in files:
-                if f.endswith(".parquet"):
-                    p = os.path.join(root, f)
-                    entries.append((os.path.relpath(p, full), os.path.getsize(p)))
-        out[value] = _md5(json.dumps(sorted(entries)))
-    return out
-
-
 def partition_row_counts(path: str, cols: list[str]) -> dict[tuple[str, ...], int]:
     """Row count per partition-value tuple of a hive-partitioned parquet
     directory, summed from parquet footers — metadata-only, no Spark job.
 
     Walks the ``<col>=<value>`` directories in ``cols`` order (the layout
-    ``partitionBy(*cols)`` writes).  Values are UNESCAPED (see
-    :func:`partition_dir_fingerprints`); the null partition
+    ``partitionBy(*cols)`` writes).  Values are UNESCAPED (hive
+    percent-encodes special chars — space, ':', '=' — into directory names;
+    Spark rows see the raw value); the null partition
     (``__HIVE_DEFAULT_PARTITION__``) reads as ``"None"`` — what ``str()`` of
     a null partition value gives."""
     import pyarrow.parquet as pq
@@ -192,28 +161,10 @@ def table_metadata_rows(writer: TableWriter, name: str) -> int | None:
 @dataclass
 class Stage:
     name: str
-    fn: Callable[..., DataFrame]
+    fn: Callable[[dict[str, DataFrame]], DataFrame]
     inputs: list[str] = field(default_factory=list)
     partition_by: list[str] | None = None
-    external: str | Callable[[], str] | None = None
-    # partition-level incremental resume (see StageRunner.stage docstring):
-    # a hive-partitioned external input directory + its partition column
-    incremental_path: str | None = None
-    incremental_col: str | None = None
-    # partition-WISE chaining: output partition v derives only from the
-    # upstream stages' partition v (same column name in every dep table)
-    partition_wise: str | None = None
-
-    def external_fprint(self) -> str | None:
-        if self.external is None:
-            return None
-        return self.external() if callable(self.external) else self.external
-
-    @property
-    def incremental(self) -> bool:
-        return bool(self.partition_by) and (
-            self.incremental_path is not None or self.partition_wise is not None
-        )
+    external: Callable[[], str] | None = None
 
 
 class StageRunner:
@@ -226,49 +177,16 @@ class StageRunner:
     def stage(
         self,
         name: str,
-        fn: Callable[..., DataFrame],
+        fn: Callable[[dict[str, DataFrame]], DataFrame],
         inputs: list[str] | None = None,
         partition_by: list[str] | None = None,
-        external: str | Callable[[], str] | None = None,
-        incremental_path: str | None = None,
-        incremental_col: str | None = None,
-        partition_wise: str | None = None,
+        external: Callable[[], str] | None = None,
     ) -> None:
-        """Register a stage.  ``external`` is a content fingerprint (or a
-        thunk producing one) covering every input the stage function closes
-        over — pass :func:`input_fingerprint` of those DataFrames so
-        changed source data invalidates the checkpoint.
-
-        ``incremental_path`` + ``incremental_col`` enable PARTITION-LEVEL
-        incremental resume: the path is a hive-partitioned parquet input
-        the stage reads, the stage is declared partition-wise (rows of
-        output partition ``partition_by[0] == v`` derive only from input
-        partition ``incremental_col == v``), and the stage fn must accept a
-        ``partition_values`` keyword (list of value strings, or None for a
-        full run) and restrict its read accordingly.  On resume, lineage
-        carries per-partition input fingerprints; when only a subset of
-        input partitions changed, ONLY those partitions are recomputed and
-        dynamically overwritten (untouched output partitions keep their
-        files byte-for-byte).  Removed input partitions, or any other
-        input/external change, fall back to a full recompute — the 100 TB
-        resume shape where a daily delta touches a handful of cells.
-
-        ``partition_wise`` CHAINS incremental resume through multi-stage
-        pipelines: it declares that this stage is partition-wise over its
-        UPSTREAM STAGE inputs — output partition ``partition_by[0] == v``
-        derives only from rows with ``partition_wise == v`` in every
-        ``inputs`` table.  On resume, per-partition fingerprints of the
-        upstream OUTPUT tables (not an external path) drive the change
-        set, so when an upstream incremental run rewrote one partition,
-        this stage — and transitively every partition-wise stage below
-        it — recomputes exactly that partition.  The stage fn must accept
-        ``partition_values`` like the external-path mode.  Parquet tables
-        only (per-partition fingerprints come from hive directories);
-        any non-partition-shaped change falls back to full recompute."""
-        self.stages.append(
-            Stage(name, fn, inputs or [], partition_by, external,
-                  incremental_path, incremental_col, partition_wise)
-        )
+        """Register a stage.  ``external`` is a thunk producing a content
+        fingerprint of every input the stage function closes over — have
+        it return :func:`input_fingerprint` of those DataFrames so changed
+        source data invalidates the checkpoint."""
+        self.stages.append(Stage(name, fn, inputs or [], partition_by, external))
 
     def _lineage_path(self, name: str) -> str:
         return os.path.join(self.writer.warehouse, f"{name}._lineage.json")
@@ -321,48 +239,18 @@ class StageRunner:
             return fprints[name]
 
         for st in self.stages:
-            ext = st.external_fprint()
-            inc_cur = self._partition_state(st) if st.incremental else None
+            ext = st.external() if st.external else None
             if resume and self._valid(st.name, verify=verify):
                 lineage = self._lineage(st.name)
-                ext_fresh = lineage.get("external_fprint") == ext
-                deps_fresh = all(
+                if lineage.get("external_fprint") == ext and all(
                     lineage.get("input_fprints", {}).get(dep) == _fprint(dep)
                     for dep in st.inputs
-                )
-                old_parts = lineage.get("input_partitions")
-                if ext_fresh and deps_fresh and (
-                    not st.incremental or old_parts == inc_cur
                 ):
                     results[st.name] = self.writer.read(st.name)
                     continue
-                # partition-wise chaining: upstream table fingerprints HAVE
-                # changed (that's the trigger), but if the change is fully
-                # partition-shaped, only the differing values recompute.
-                # External-path mode still requires fresh upstream tables.
-                if (
-                    st.incremental
-                    and ext_fresh
-                    and (deps_fresh or st.partition_wise is not None)
-                    and old_parts is not None
-                    and inc_cur
-                    and set(old_parts) <= set(inc_cur)  # no removed partitions
-                    and old_parts != inc_cur
-                    and lineage.get("partitions") is not None
-                    and len(lineage["partitions"]) < 10000
-                ):
-                    changed = sorted(
-                        v for v in inc_cur if old_parts.get(v) != inc_cur[v]
-                    )
-                    results[st.name] = self._run_incremental(
-                        st, results, lineage, changed, inc_cur, ext, _fprint
-                    )
-                    fprints[st.name] = table_fingerprint(self.writer, st.name)
-                    ran.append(f"{st.name}[{len(changed)} partitions]")
-                    continue
             t0 = time.time()
             deps = {k: results[k] for k in st.inputs}
-            df = st.fn(deps, partition_values=None) if st.incremental else st.fn(deps)
+            df = st.fn(deps)
             self.writer.write(df, st.name, partition_by=st.partition_by)
             out = self.writer.read(st.name)
             ran.append(st.name)
@@ -382,8 +270,6 @@ class StageRunner:
                 "wall_s": round(time.time() - t0, 3),
                 "partition_by": st.partition_by,
             }
-            if inc_cur is not None:
-                lineage["input_partitions"] = inc_cur
             if st.partition_by:
                 if self.writer.use_iceberg:  # no hive directories to read
                     per_part = {
@@ -407,114 +293,3 @@ class StageRunner:
             results[st.name] = out
         self.last_run_report = {"stages_run": ran}
         return results
-
-    def _partition_state(self, st: Stage) -> dict[str, str]:
-        """Current per-partition-value fingerprint map driving incremental
-        resume.  External-path mode fingerprints the declared hive input
-        directory; partition-wise mode fingerprints every upstream OUTPUT
-        table and combines them per value (a value changes when ANY dep's
-        partition changed).  Iceberg deps have no hive directories — the
-        empty map disables incremental and falls back to full recompute."""
-        if st.partition_wise is None:
-            return partition_dir_fingerprints(
-                st.incremental_path, st.incremental_col
-            )
-        if self.writer.use_iceberg or not st.inputs:
-            return {}
-        combined: dict[str, list[str]] = {}
-        for dep in st.inputs:
-            for v, fp in partition_dir_fingerprints(
-                self.writer.path(dep), st.partition_wise
-            ).items():
-                combined.setdefault(v, []).append(f"{dep}:{fp}")
-        return {v: _md5("|".join(parts)) for v, parts in combined.items()}
-
-    def _run_incremental(
-        self, st: Stage, results: dict, lineage: dict, changed: list[str],
-        inc_cur: dict[str, str], ext: str | None, _fprint,
-    ) -> DataFrame:
-        """Recompute ONLY the changed input partitions of an incremental
-        stage and dynamically overwrite their output partitions; lineage
-        per-partition counts are merged, untouched partitions keep their
-        files byte-for-byte (asserted in tests/test_pipeline.py).
-
-        A changed input partition whose recompute yields ZERO output rows
-        has no partition in the written frame, so dynamic overwrite leaves
-        the old directory behind — those stale output partitions are
-        explicitly deleted (matched by unescaped value) before lineage is
-        merged, so emptied partitions disappear instead of silently
-        surviving with their old rows."""
-        t0 = time.time()
-        deps = {k: results[k] for k in st.inputs}
-        # materialize the recomputed slice ONCE (round-5 advice): the write
-        # and the lineage counts below otherwise execute st.fn twice, and a
-        # nondeterministic stage fn could then record counts disagreeing
-        # with the written files — silently degrading the next resume to a
-        # full recompute.  The slice is bounded by the changed partitions.
-        df = st.fn(deps, partition_values=changed).localCheckpoint(eager=True)
-        self.writer.write_partitions(df, st.name, st.partition_by)
-        out = self.writer.read(st.name)
-        pcol = st.partition_by[0]
-        changed_set = set(changed)
-        kept = [p for p in lineage["partitions"] if p[pcol] not in changed_set]
-        # count from the RECOMPUTED frame, not the written table: a changed
-        # partition that produced zero rows is absent from the table's
-        # changed-partition scan only after its stale directory is dropped
-        new_counts = (
-            df.filter(F.col(pcol).cast("string").isin(changed))
-            .groupBy(pcol)
-            .agg(F.count("*").alias("n"))
-            .collect()
-        )
-        df.unpersist()
-        stale = sorted(changed_set - {str(r[pcol]) for r in new_counts})
-        if stale:
-            out = self._drop_output_partitions(st.name, pcol, stale)
-        parts = kept + [
-            {pcol: str(r[pcol]), "rows": r["n"]} for r in new_counts
-        ]
-        parts.sort(key=lambda p: p[pcol])
-        fp = table_fingerprint(self.writer, st.name)
-        new_lineage = {
-            **lineage,
-            "input_fprints": {dep: _fprint(dep) for dep in st.inputs},
-            "external_fprint": ext,
-            "rows": sum(p["rows"] for p in parts),
-            "fingerprint": fp,
-            "wall_s": round(time.time() - t0, 3),
-            "input_partitions": inc_cur,
-            "partitions": parts,
-            "incremental": {"recomputed": changed},
-        }
-        with open(self._lineage_path(st.name), "w") as f:
-            json.dump(new_lineage, f, indent=1)
-        return out
-
-    def _drop_output_partitions(
-        self, name: str, pcol: str, values: list[str]
-    ) -> DataFrame:
-        """Delete the listed output partitions (by unescaped value) and
-        return a fresh reader — the emptied-partition half of dynamic
-        overwrite (see :meth:`_run_incremental`)."""
-        vset = set(values)
-        if self.writer.use_iceberg:
-            quoted = ", ".join("'" + v.replace("'", "''") + "'" for v in values)
-            self.spark.sql(
-                f"DELETE FROM local.{name} "
-                f"WHERE CAST({pcol} AS STRING) IN ({quoted})"
-            )
-            return self.writer.read(name)
-        import shutil
-
-        target = self.writer.path(name)
-        prefix = f"{pcol}="
-        for d in os.listdir(target):
-            full = os.path.join(target, d)
-            if (
-                d.startswith(prefix)
-                and os.path.isdir(full)
-                and _unescape_hive(d[len(prefix):]) in vset
-            ):
-                shutil.rmtree(full)
-        self.spark.catalog.refreshByPath(target)
-        return self.writer.read(name)

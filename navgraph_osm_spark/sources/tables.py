@@ -78,9 +78,7 @@ class TableWriter:
     def path(self, name: str) -> str:
         return os.path.join(self.warehouse, name)
 
-    def write(
-        self, df: DataFrame, name: str, partition_by: list[str] | None = None, mode: str = "overwrite"
-    ) -> str:
+    def write(self, df: DataFrame, name: str, partition_by: list[str] | None = None) -> str:
         target = self.path(name)
         if self.use_iceberg:
             writer = df.writeTo(f"local.{name}")
@@ -88,7 +86,7 @@ class TableWriter:
                 writer = writer.partitionedBy(*partition_by)
             writer.createOrReplace()
         else:
-            w = df.write.mode(mode)
+            w = df.write.mode("overwrite")
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.parquet(target)
@@ -149,25 +147,6 @@ class TableWriter:
             w = w.sortBy(*sort_cols)
         w.saveAsTable(tbl)
         return tbl
-
-    def write_partitions(
-        self, df: DataFrame, name: str, partition_by: list[str]
-    ) -> str:
-        """Overwrite ONLY the partitions present in ``df`` (dynamic partition
-        overwrite) — the incremental-resume write path: untouched partition
-        directories keep their files byte-for-byte."""
-        target = self.path(name)
-        if self.use_iceberg:
-            df.writeTo(f"local.{name}").overwritePartitions()
-            return f"local.{name}"
-        prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            df.write.mode("overwrite").partitionBy(*partition_by).parquet(target)
-        finally:
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        self.spark.catalog.refreshByPath(target)
-        return target
 
     def read_bucketed(self, name: str) -> DataFrame:
         if self.use_iceberg:

@@ -7,13 +7,32 @@ import re
 import numpy as np
 import pytest
 
-from navgraph_osm_spark.functions.geo import find_middle_point_np
 from navgraph_osm_spark.operators.export import export_rows, halves_expr, write_csv
 from navgraph_osm_spark.operators.graph_build import build_edges
 from navgraph_osm_spark.operators.turn_expand import expand_turns
 from navgraph_osm_spark.sources.synth import gen_road_grid
 
 _LS = re.compile(r"^LINESTRING\((-?\d+\.\d{6} -?\d+\.\d{6})(;-?\d+\.\d{6} -?\d+\.\d{6})*\)$")
+
+
+def _scalar_halves(lats, lngs):
+    """Scalar reference for one polyline: (midpoint, split).  The export's
+    leg formula ``sqrt(dlat*dlat + dlng*dlng)`` and a sequential cumsum
+    (the SQL oracle's association order), one half for both split and
+    midpoint; a 1-point or zero-length polyline takes its first point."""
+    lats, lngs = np.asarray(lats, dtype=np.float64), np.asarray(lngs, dtype=np.float64)
+    dlat, dlng = np.diff(lats), np.diff(lngs)
+    legs = np.sqrt(dlat * dlat + dlng * dlng)
+    cum = np.concatenate(([0.0], np.cumsum(legs)))
+    half = cum[-1] / 2.0
+    split = int(np.searchsorted(cum, half, side="right"))
+    if lats.size == 1:
+        return (lats[0], lngs[0]), split
+    i0 = 0 if cum[-1] == 0.0 else min(split - 1, legs.size - 1)
+    frac = (half - cum[i0]) / legs[i0] if legs[i0] > 0 else 0.0
+    mid = (lats[i0] + (lats[i0 + 1] - lats[i0]) * frac,
+           lngs[i0] + (lngs[i0 + 1] - lngs[i0]) * frac)
+    return mid, split
 
 
 @pytest.fixture(scope="module")
@@ -47,12 +66,13 @@ def test_geom_starts_at_source_midpoint(graph):
     e = edges.filter(edges["edge_id"] == t["src_edge_id"]).first()
     lats = [p["lat"] for p in e["geom"]]
     lngs = [p["lng"] for p in e["geom"]]
-    mlat, mlng = find_middle_point_np(lats, lngs)
+    (mlat, mlng), _split = _scalar_halves(lats, lngs)
     row = (
         export_rows(edges, turns.limit(0).unionByName(turns.filter(
             (turns["src_edge_id"] == t["src_edge_id"]) & (turns["tgt_edge_id"] == t["tgt_edge_id"])
         )))
     ).first()
+    assert (row["src_mid_lat"], row["src_mid_lng"]) == (float(mlat), float(mlng))
     first_pt = row["geom"][len("LINESTRING(") :].split(";")[0]
     lng_s, lat_s = first_pt.split(" ")
     assert abs(float(lng_s) - mlng) < 5e-7 and abs(float(lat_s) - mlat) < 5e-7
@@ -102,21 +122,7 @@ def test_halves_kernel_vectorized_matches_scalar(spark):
     got = _sql_halves(spark, edges)
 
     for eid, lats, lngs in edges:
-        # scalar reference: the SQL leg formula and a sequential per-edge
-        # cumsum (the SQL oracle's association order), one half for both
-        # split and midpoint
-        dlat, dlng = np.diff(lats), np.diff(lngs)
-        legs = np.sqrt(dlat * dlat + dlng * dlng)
-        cum = np.concatenate(([0.0], np.cumsum(legs)))
-        half = cum[-1] / 2.0
-        split = int(np.searchsorted(cum, half, side="right"))
-        if lats.size == 1:
-            mid = (lats[0], lngs[0])
-        else:
-            i0 = 0 if cum[-1] == 0.0 else min(split - 1, legs.size - 1)
-            frac = (half - cum[i0]) / legs[i0] if legs[i0] > 0 else 0.0
-            mid = (lats[i0] + (lats[i0 + 1] - lats[i0]) * frac,
-                   lngs[i0] + (lngs[i0 + 1] - lngs[i0]) * frac)
+        mid, split = _scalar_halves(lats, lngs)
         pts = list(zip(lats, lngs))
         want_out = [mid] + pts[split:]
         want_in = pts[:split] + [mid]
@@ -157,8 +163,12 @@ def test_halves_kernel_split_equality_case(spark):
 
 def test_export_rows_runs_no_python(graph):
     """The whole export — halves, joins, LINESTRING assembly — plans as
-    JVM operators: no Python node anywhere in it."""
-    edges, turns = graph
+    JVM operators: no Python node anywhere in it.  Each join side computes
+    its own half from ``edges``, so the export plans only its two joins to
+    the expanded edges, no self-join of ``edges``.  The inputs are
+    checkpointed so the plan holds only the export's own operators."""
+    edges, turns = (df.localCheckpoint() for df in graph)
     plan = export_rows(edges, turns)._jdf.queryExecution().executedPlan().toString()
     for node in ("MapInArrow", "ArrowEvalPython", "BatchEvalPython", "PythonUDF"):
         assert node not in plan, plan
+    assert len(re.findall(r"SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin", plan)) == 2, plan
